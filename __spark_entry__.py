@@ -1129,7 +1129,8 @@ _INCR_CACHE: dict[tuple[str, str], dict] = {}
 def _incremental(spark: SparkSession, sf_dir: str) -> dict:
     """Memoized two-batch incremental ingest (half the conversations,
     then the full corpus through ingest_increment — already-seen convs
-    skipped, incremental CC/link/nodes exercised). Both gated
+    skipped, the second increment appended and the derived stages
+    recomputed over both). Both gated
     incremental queries are views over the same committed snapshot,
     which must hash-match the same closed-form oracles as one full
     run. Keyed by applicationId (session-unique; id(spark) can be

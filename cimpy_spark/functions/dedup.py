@@ -162,7 +162,8 @@ def bucket_pairs(
 ) -> DataFrame:
     """(doc_a < doc_b) candidate pairs per bucket of size ≤ max_bucket
     — ONE grouped aggregation with in-row pair generation (r8, guide
-    §2.4): collect the bucket's ids (bounded by the cap contract),
+    §2.4): collect the bucket's DISTINCT ids (bounded by the cap
+    contract; a repeated id yields neither a self-pair nor duplicates),
     drop oversize buckets with a plain filter on the collected size,
     and emit the sorted-id i<j pairs from array expressions.
 
@@ -178,7 +179,7 @@ def bucket_pairs(
     (the ingest snapshot's provenance schema). Pairs are NOT
     deduplicated across buckets here — same as the raw self-join."""
     grouped = keys.groupBy(*key_cols).agg(
-        F.sort_array(F.collect_list(id_col)).alias("__ids")
+        F.sort_array(F.collect_set(id_col)).alias("__ids")
     )
     small = grouped.filter(F.size("__ids") <= max_bucket)
     ids = F.col("__ids")

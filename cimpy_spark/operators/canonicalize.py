@@ -66,11 +66,9 @@ def canonical_labels(
     small_threshold: int = SMALL_LINKS_THRESHOLD,
 ) -> DataFrame:
     """(entity_id, canonical_id) for EVERY vertex — declared entities
-    and raw alias endpoints alike. This is the lossless contraction:
-    `canonical_map` is its restriction to declared entities, and the
-    incremental path must start from THIS (a declared-only map drops
-    components reachable only through undeclared endpoints, which a
-    later increment may touch)."""
+    and raw alias endpoints alike. This is the lossless contraction
+    committed as the `cmap_full` stage; `canonical_map` is its
+    restriction to declared entities."""
     # Undirected, deduped link set; restrict to declared entities is
     # not required (labels for undeclared alias endpoints are simply
     # dropped at the end by the final join).
@@ -288,93 +286,6 @@ def _maybe_broadcast(df: DataFrame, n_rows: int | None) -> DataFrame:
     return df
 
 
-def incremental_canonical_map(
-    old_labels: DataFrame,
-    new_entities: DataFrame,
-    new_links: DataFrame,
-    max_iter: int = 25,
-) -> DataFrame:
-    """Merge NEW sameAs links (and newly declared entities) into a
-    committed canonical map without re-running CC over the full link
-    corpus.
-
-    Old links are already absorbed into `old_cmap` (each old component
-    is contracted to its canonical id), so it suffices to:
-    1. rewrite the new links' endpoints through the old map
-       (unknown endpoints map to themselves),
-    2. run the CC loop over just those rewritten links — a graph whose
-       vertices are component representatives touched by new data,
-    3. compose: final(entity) = delta(old_label(entity)).
-
-    At 10^12-turn scale this is the difference between iterating over
-    the whole alias corpus and iterating over one increment.
-
-    `old_labels`: (entity_id, canonical_id) committed FULL labeling
-    (``canonical_labels`` output — all vertices, not just declared
-    entities; a declared-only map is lossy and breaks merges through
-    undeclared alias endpoints).
-    `new_entities`: (entity_id) declared in the increment.
-    `new_links`: (src, dst) sameAs pairs from the increment.
-    Returns the full updated labeling (entity_id, canonical_id).
-    """
-    # labels0: every known vertex -> its current representative
-    labels0 = old_labels.unionByName(
-        new_entities.select("entity_id")
-        .join(old_labels.select("entity_id"), "entity_id", "left_anti")
-        .select("entity_id", F.col("entity_id").alias("canonical_id"))
-    )
-
-    # rewrite new link endpoints through the old map
-    def _rewrite(col: str) -> DataFrame:
-        m = labels0.select(
-            F.col("entity_id").alias(col), F.col("canonical_id").alias(f"__{col}")
-        )
-        return m
-
-    rewritten = (
-        new_links.join(_rewrite("src"), "src", "left")
-        .join(_rewrite("dst"), "dst", "left")
-        .select(
-            F.coalesce("__src", "src").alias("src"),
-            F.coalesce("__dst", "dst").alias("dst"),
-        )
-        .filter(F.col("src") != F.col("dst"))
-        .distinct()
-    )
-
-    # CC over the contracted increment graph only
-    touched = (
-        rewritten.select(F.col("src").alias("entity_id"))
-        .union(rewritten.select(F.col("dst").alias("entity_id")))
-        .distinct()
-    )
-    if touched.isEmpty():
-        return labels0
-    delta = canonical_labels(touched, rewritten, max_iter=max_iter)
-
-    # compose: vertex -> old label -> delta label (unchanged labels
-    # pass through); vertices brand-new to the graph (raw endpoints in
-    # the increment) come straight from delta
-    composed = (
-        labels0.join(
-            delta.select(
-                F.col("entity_id").alias("canonical_id"),
-                F.col("canonical_id").alias("__final"),
-            ),
-            "canonical_id",
-            "left",
-        )
-        .select(
-            "entity_id",
-            F.coalesce("__final", "canonical_id").alias("canonical_id"),
-        )
-    )
-    brand_new = delta.join(
-        labels0.select("entity_id"), "entity_id", "left_anti"
-    ).select("entity_id", "canonical_id")
-    return composed.unionByName(brand_new)
-
-
 def canonical_edges(
     edges: DataFrame, cmap: DataFrame, cmap_rows: int | None = 0
 ) -> DataFrame:
@@ -400,171 +311,6 @@ def canonical_edges(
             F.col("csrc").alias("src"), F.col("pred"), F.col("cdst").alias("dst")
         )
         .dropDuplicates(["src", "pred", "dst"])
-    )
-
-
-def incremental_canonical_edges(
-    old_canon_edges: DataFrame,
-    edges: DataFrame,
-    candidate_entities: DataFrame,
-    old_labels: DataFrame,
-    new_labels: DataFrame,
-    cmap: DataFrame,
-    cmap_rows: int | None = 0,
-) -> DataFrame:
-    """Rewrite-only-what-the-increment-touched canonical edges.
-
-    Ingest is monotone (edges are never deleted), and relabeling is
-    per-component merge: when components merge, only the LOSING
-    component's members change label (the winner keeps the min id).
-    So a committed canonical edge row stays derivable unless one of
-    its endpoints' OLD canonical ids belongs to a losing component;
-    everything else is reachable only through raw edges the increment
-    touched.
-
-    - `candidate_entities`: entity ids the increment may involve as
-      edge endpoints (the increment's ref subjects/objects plus the
-      previously-dangling tail) — increment-sized by construction.
-    - carried = old rows with neither endpoint in a losing component
-      (two broadcast anti-joins over the tiny losing-label set).
-    - recomputed = full rewrite of raw edges touching a relabeled or
-      candidate entity (membership via broadcast flags — a narrow
-      scan, no corpus shuffle).
-    - overlap between the two (a recomputed row that equals a carried
-      row, e.g. a new raw edge landing on an existing canonical pair)
-      is removed with a broadcast semi/anti pair, never a global
-      dedupe: the only corpus-sized operations are narrow scans.
-    """
-    relabeled = (
-        old_labels.alias("o")
-        .join(new_labels.alias("n"), "entity_id")
-        .filter(F.col("o.canonical_id") != F.col("n.canonical_id"))
-        .select(
-            "entity_id", F.col("o.canonical_id").alias("old_c")
-        )
-    )
-    losing = relabeled.select(F.col("old_c").alias("c")).distinct()
-    touched_ents = (
-        relabeled.select("entity_id")
-        .unionByName(candidate_entities.select("entity_id"))
-        .distinct()
-    )
-
-    # raw edges with any endpoint touched — broadcast flag joins, narrow
-    ms = touched_ents.select(F.col("entity_id").alias("src")).withColumn(
-        "__ms", F.lit(1)
-    )
-    md = touched_ents.select(F.col("entity_id").alias("dst")).withColumn(
-        "__md", F.lit(1)
-    )
-    touched_raw = (
-        edges.join(F.broadcast(ms), "src", "left")
-        .join(F.broadcast(md), "dst", "left")
-        .filter(F.col("__ms").isNotNull() | F.col("__md").isNotNull())
-        .select("src", "pred", "dst")
-    )
-    recomputed = canonical_edges(touched_raw, cmap, cmap_rows)
-
-    carried = old_canon_edges.select("src", "pred", "dst").join(
-        F.broadcast(losing.select(F.col("c").alias("src"))), "src", "left_anti"
-    ).join(
-        F.broadcast(losing.select(F.col("c").alias("dst"))), "dst", "left_anti"
-    ).select("src", "pred", "dst")
-
-    # subtract recomputed∩carried without a global dedupe: find the
-    # overlap by scanning old rows against the (small, broadcast)
-    # recomputed set, then anti-join recomputed against that overlap
-    overlap = carried.join(
-        F.broadcast(recomputed), ["src", "pred", "dst"], "left_semi"
-    )
-    fresh = recomputed.join(
-        F.broadcast(overlap), ["src", "pred", "dst"], "left_anti"
-    )
-    return carried.unionByName(fresh)
-
-
-def incremental_canonical_nodes(
-    old_nodes: DataFrame,
-    all_triples: DataFrame,
-    new_triples: DataFrame,
-    old_labels: DataFrame,
-    new_labels: DataFrame,
-    entities: DataFrame,
-    cmap_rows: int | None = 0,
-) -> DataFrame:
-    """Touched-component node re-election: recompute the attribute
-    election (first-wins type / last-wins attrs, see canonical_nodes)
-    ONLY for canonical entities the increment can have changed —
-
-    - canonicals (new labeling) of subjects mentioned in the increment
-      (new attribute rows may win or add elections), and
-    - canonicals on either side of a label change (component merges
-      re-scope the election group).
-
-    Everything else carries over from the committed nodes snapshot
-    verbatim: an election over an unchanged member set with no new
-    mentions cannot change (both elections are pure min/max over the
-    group). At corpus scale this recomputes the increment's
-    neighborhood, not the graph.
-    """
-    # canonical ids whose member set or mention set changed. Only
-    # attribute-kind mentions can move an election — ref/sameAs
-    # mentions don't participate (label changes are caught separately
-    # by the relabel diff).
-    new_attr_subjects = (
-        new_triples.filter(F.col("obj_kind").isin("literal", "enum", "type"))
-        .select(F.col("subj").alias("entity_id"))
-        .distinct()
-    )
-    relabeled = (
-        old_labels.alias("o")
-        .join(new_labels.alias("n"), "entity_id")
-        .filter(F.col("o.canonical_id") != F.col("n.canonical_id"))
-    )
-    touched = (
-        relabeled.select(F.col("o.canonical_id").alias("canonical_id"))
-        .union(relabeled.select(F.col("n.canonical_id").alias("canonical_id")))
-        .union(
-            new_attr_subjects.join(new_labels, "entity_id").select("canonical_id")
-        )
-        # brand-new entities absent from old_labels
-        .union(
-            new_labels.join(old_labels.select("entity_id"), "entity_id", "left_anti")
-            .select("canonical_id")
-        )
-        .distinct()
-    )
-
-    # recompute elections for touched components over ALL their
-    # triples. Membership is the DECLARED restriction — the full-run
-    # path elects over cmap (declared entities only), so the
-    # incremental path must too, or about-mentions of undeclared
-    # aliases would join the election here but not there.
-    touched_members = (
-        new_labels.join(_maybe_broadcast(touched, cmap_rows), "canonical_id")
-        .join(entities.select("entity_id"), "entity_id", "left_semi")
-        .select("entity_id", "canonical_id")
-    )
-    touched_triples = all_triples.join(
-        _maybe_broadcast(
-            touched_members.select(F.col("entity_id").alias("subj")), cmap_rows
-        ),
-        "subj",
-        "left_semi",
-    )
-    recomputed = canonical_nodes(
-        touched_triples,
-        touched_members.select("entity_id", "canonical_id"),
-        cmap_rows,
-    )
-
-    carried = old_nodes.join(
-        _maybe_broadcast(touched.select(F.col("canonical_id").alias("entity_id")), cmap_rows),
-        "entity_id",
-        "left_anti",
-    )
-    return carried.select("entity_id", "attr", "value", "profile").unionByName(
-        recomputed.select("entity_id", "attr", "value", "profile")
     )
 
 

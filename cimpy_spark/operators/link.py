@@ -43,11 +43,10 @@ def declared_entities_keyed(triples: DataFrame) -> DataFrame:
     """`declared_entities` plus the WINNING election key
     (conv_id, turn_idx, mention_idx).
 
-    The key makes the first-wins election increment-composable: a
-    committed keyed dictionary merged with an increment's keyed
-    dictionary re-elects by pure min — no rescan of old triples
-    (min(old winner, new rows) = min(all rows)). One struct-min keeps
-    it a single hash aggregation."""
+    The key columns are part of the committed `entities` stage layout
+    (first-wins provenance of each declaration); linking and
+    canonicalization read only ``entity_id``. One struct-min keeps it
+    a single hash aggregation."""
     decls = triples.filter(F.col("pred") == "rdf_type")
     w = F.min(
         F.struct("conv_id", "turn_idx", "mention_idx", F.col("obj").alias("type"))
@@ -58,22 +57,6 @@ def declared_entities_keyed(triples: DataFrame) -> DataFrame:
         .select(
             "entity_id", "w.type", "w.conv_id", "w.turn_idx", "w.mention_idx"
         )
-    )
-
-
-def merge_keyed_entities(old_keyed: DataFrame, new_keyed: DataFrame) -> DataFrame:
-    """Merge a committed keyed dictionary with an increment's keyed
-    dictionary — the incremental form of `declared_entities_keyed`
-    (first declaration in stable order wins; composable because each
-    side already carries its minimum)."""
-    both = old_keyed.unionByName(new_keyed)
-    w = F.min(
-        F.struct("conv_id", "turn_idx", "mention_idx", "type")
-    ).alias("w")
-    return (
-        both.groupBy("entity_id")
-        .agg(w)
-        .select("entity_id", "w.type", "w.conv_id", "w.turn_idx", "w.mention_idx")
     )
 
 
@@ -141,52 +124,6 @@ def quarantine_from_resolved(resolved: DataFrame) -> DataFrame:
         resolved.filter(~F.col("resolved"))
         .groupBy("dst")
         .agg(F.count(F.lit(1)).alias("n_refs"))
-    )
-
-
-def incremental_resolve(
-    old_resolved: DataFrame,
-    new_triples: DataFrame,
-    all_entities: DataFrame,
-    new_entities_only: DataFrame,
-    broadcast_dict: bool | None = None,
-) -> DataFrame:
-    """Incremental linking: given the committed resolved set and an
-    increment, re-join only what can have changed —
-
-    - refs extracted from the increment resolve against the FULL
-      dictionary;
-    - previously-dangling refs (resolved = false) re-check against
-      ONLY the entities the increment declared (a forward reference
-      satisfied later, the reference's two-pass rationale,
-      cimpy/cimimport.py:79-83);
-    - previously-resolved refs are immutable (entities are never
-      deleted by ingest) and pass through untouched.
-
-    At corpus scale the re-joined fraction is the increment + the
-    dangling tail — not the full ref corpus.
-    """
-    new_refs_resolved = resolve_references(
-        new_triples, all_entities, broadcast_dict=broadcast_dict
-    )
-    dangling = old_resolved.filter(~F.col("resolved")).select("src", "pred", "dst")
-    recheck_dict = new_entities_only.select(F.col("entity_id").alias("dst")).withColumn(
-        "__hit", F.lit(1)
-    )
-    # same tri-state broadcast policy as the main dictionary (an
-    # increment can be bootstrap-sized, so don't broadcast
-    # unconditionally): True → explicit broadcast, None/False → plain
-    # join with AQE runtime conversion
-    if broadcast_dict is True:
-        recheck_dict = F.broadcast(recheck_dict)
-    rechecked = (
-        dangling.join(recheck_dict, "dst", "left")
-        .select("src", "pred", "dst", F.col("__hit").isNotNull().alias("resolved"))
-    )
-    return (
-        old_resolved.filter(F.col("resolved"))
-        .unionByName(rechecked)
-        .unionByName(new_refs_resolved)
     )
 
 

@@ -16,6 +16,8 @@ killed run resumes from the last committed stage (north_rule).
 
 from __future__ import annotations
 
+import warnings
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -25,11 +27,16 @@ from cimpy_spark.operators.canonicalize import (
     canonical_labels,
     canonical_nodes,
 )
-from cimpy_spark.operators.extract import extract_triples
+from cimpy_spark.operators.extract import (
+    TRIPLE_SCHEMA,
+    extract_triples,
+    merge_headers,
+    snapshot_header,
+    snapshot_meta,
+)
 from cimpy_spark.operators.link import (
     declared_entities_keyed,
     edges_from_resolved,
-    merge_keyed_entities,
     quarantine_from_resolved,
     resolve_references,
 )
@@ -59,8 +66,6 @@ def run_pipeline(
     # fact stage is APPEND-ONLY (Iceberg-append stand-in): the
     # bootstrap writes increment 0; later ingest_increment calls add
     # increment dirs without ever rewriting old ones
-    from cimpy_spark.operators.extract import TRIPLE_SCHEMA
-
     if not force and ledger.is_append_committed("triples"):
         out["triples"] = ledger.read_append_stage(spark, "triples", TRIPLE_SCHEMA)
     else:
@@ -73,18 +78,28 @@ def run_pipeline(
     # per-profile snapshot header (model-description analog,
     # cimpy/cimexport.py:378-389) incl. the first-wins author/namespace
     # capture; commit wall time lives in the ledger
-    from cimpy_spark.operators.extract import snapshot_header, snapshot_meta
-
     out["meta"] = ledger.run_stage(
         spark,
         "meta",
         lambda: snapshot_meta(triples, snapshot_header(transcripts)),
         force=force,
     )
+    out.update(_derived_stages(spark, ledger, triples, force))
+    return out
+
+
+def _derived_stages(
+    spark: SparkSession, ledger: LineageLedger, triples: DataFrame, force: bool
+) -> dict[str, DataFrame]:
+    """Every stage derived from the committed triple snapshot, in
+    commit order: entities → linked → edges → quarantine → cmap_full
+    → cmap → canon_edges → nodes. Shared by `run_pipeline` (resumable)
+    and `ingest_increment` (forced after each append), so both reach
+    the same committed layout through one code path."""
+    out: dict[str, DataFrame] = {}
 
     # committed KEYED (entity_id, type, conv_id, turn_idx, mention_idx):
-    # carrying the winning election key makes the dictionary
-    # increment-composable (min(old winner, new rows) = min(all rows))
+    # the winning election key is part of the stage's committed layout
     out["entities"] = ledger.run_stage(
         spark, "entities", lambda: declared_entities_keyed(triples), force=force
     )
@@ -108,13 +123,18 @@ def run_pipeline(
         spark, "quarantine", lambda: quarantine_from_resolved(out["linked"]), force=force
     )
 
-    # full labeling committed for the incremental path (lossless
-    # contraction); public cmap = restriction to declared entities
+    # full labeling (declared entities AND undeclared alias endpoints);
+    # public cmap = its restriction to declared entities. No stage
+    # below reads the undeclared rows; it stays committed because its
+    # ledger record is part of the committed layout (crash-resume
+    # checkpoints end at it, kgbench's among them), and its row count
+    # is the broadcast guard for the canonical rewrites below
     out["cmap_full"] = ledger.run_stage(
         spark, "cmap_full",
         lambda: canonical_labels(entities, P.same_links(triples)),
         force=force,
     )
+    cmap_rows = ledger.records()["cmap_full"]["rows_out"]
     out["cmap"] = ledger.run_stage(
         spark, "cmap",
         lambda: entities.join(out["cmap_full"], "entity_id").select(
@@ -126,12 +146,12 @@ def run_pipeline(
 
     out["canon_edges"] = ledger.run_stage(
         spark, "canon_edges",
-        lambda: canonical_edges(out["edges"], cmap),
+        lambda: canonical_edges(out["edges"], cmap, cmap_rows),
         partition_by=["pred"], force=force,
     )
     out["nodes"] = ledger.run_stage(
         spark, "nodes",
-        lambda: canonical_nodes(triples, cmap),
+        lambda: canonical_nodes(triples, cmap, cmap_rows),
         # provenance partition first (rdf:about routing analog), then
         # attribute family for consumer partition pruning
         partition_by=["profile", "attr"], force=force,
@@ -143,24 +163,23 @@ def ingest_increment(
     spark: SparkSession, transcripts: DataFrame, out_dir: str
 ) -> dict[str, DataFrame]:
     """Batch-incremental ingest: extract ONLY conversations not yet in
-    the committed triple snapshot, union with it, and recompute the
-    downstream stages. Extraction dominates cost at corpus scale, and
-    re-extraction of old conversations never happens — the
-    incremental axis of the reference ("more profile files later",
-    cimpy/cimimport.py:93,197) distributed.
+    the committed triple snapshot, append them as a new increment, and
+    recompute the derived stages over the whole snapshot. Extraction
+    dominates cost at corpus scale, and re-extraction of old
+    conversations never happens — the incremental axis of the
+    reference ("more profile files later", cimpy/cimimport.py:93,197)
+    distributed.
 
     The new-conversation filter is a left-anti join against the
     committed triples' conv_ids (at 10^12-turn scale this becomes a
     partition-watermark check against the lineage ledger — same
-    semantics, cheaper lookup). EVERY downstream stage is incremental
-    when its committed snapshot postdates the triples commit:
-    entities merge keyed dictionaries, linking re-joins only the
-    increment + dangling tail, CC iterates only the increment's links
-    over the committed contraction, canonical edges rewrite only
-    increment-touched raw edges, and node elections recompute only
-    touched components. All are equivalence-tested against a single
-    full run (sameAs links may join old and new components, so the
-    canonical map stays global by construction).
+    semantics, cheaper lookup). The snapshot header is the one
+    increment-keyed merge: a micro-batch's transcripts lack the
+    history its first-wins election needs. Every other derived stage
+    is forced through `_derived_stages`, the same code `run_pipeline`
+    runs, so the committed snapshot equals a single full run by
+    construction. An output dir without an append-format triple
+    snapshot bootstraps through `run_pipeline`.
     """
     ledger = LineageLedger(out_dir)
     # gate on the APPEND format specifically: a legacy-format triples
@@ -169,61 +188,12 @@ def ingest_increment(
     if not ledger.is_append_committed("triples"):
         return run_pipeline(spark, transcripts, out_dir)
 
-    from cimpy_spark.operators.extract import TRIPLE_SCHEMA
-
     committed = ledger.read_append_stage(spark, "triples", TRIPLE_SCHEMA)
-    # Trust the committed labeling ONLY if it was committed after the
-    # current triples snapshot: a crash between the triples commit and
-    # the cmap_full commit of a previous increment leaves a stale
-    # labeling whose silent reuse would drop that increment's sameAs
-    # merges forever. Stale/missing -> full CC over the merged set.
-    # (Materialize eagerly: the incremental cmap_full stage overwrites
-    # the very snapshot this reads — same hazard as triples below.)
-    old_labels = (
-        checkpoint_df(spark.read.parquet(ledger.stage_dir("cmap_full")))
-        if ledger.committed_after("cmap_full", "triples")
-        else None
-    )
-    # incremental linking needs the pre-increment resolved set AND the
-    # pre-increment entity dictionary (to know which declarations are
-    # new); both must postdate the current triples commit
-    use_inc_link = ledger.committed_after(
-        "linked", "triples"
-    ) and ledger.committed_after("entities", "triples")
-    old_linked = (
-        checkpoint_df(spark.read.parquet(ledger.stage_dir("linked")))
-        if use_inc_link
-        else None
-    )
-    old_entities = (
-        checkpoint_df(spark.read.parquet(ledger.stage_dir("entities")))
-        if use_inc_link
-        else None
-    )
-    old_nodes = (
-        checkpoint_df(spark.read.parquet(ledger.stage_dir("nodes")))
-        if old_labels is not None and ledger.committed_after("nodes", "triples")
-        else None
-    )
-    old_canon_edges = None
-    if (
-        old_labels is not None
-        and use_inc_link
-        and ledger.committed_after("canon_edges", "triples")
-    ):
-        if ledger.records()["canon_edges"]["rows_out"] > 0:
-            old_canon_edges = checkpoint_df(
-                spark.read.parquet(ledger.stage_dir("canon_edges"))
-            )
-        else:
-            # a partitioned write of an EMPTY stage leaves no parquet
-            # files to infer a schema from — stand in an empty frame
-            old_canon_edges = spark.createDataFrame(
-                [], "src string, pred string, dst string"
-            )
     # committed first-wins header (read BEFORE the append below — the
     # meta stage is force-overwritten every increment, and its commit
-    # must postdate the pre-append triples commit to be trusted)
+    # must postdate the pre-append triples commit to be trusted;
+    # materialized eagerly because the meta stage overwrites the very
+    # snapshot this reads)
     old_hdr = None
     if ledger.committed_after("meta", "triples"):
         _om = spark.read.parquet(ledger.stage_dir("meta"))
@@ -242,31 +212,15 @@ def ingest_increment(
 
     seen = committed.select("conv_id").distinct()
     fresh = transcripts.join(seen, "conv_id", "left_anti")
-    new_triples = checkpoint_df(extract_triples(fresh))
 
     # APPEND the increment (old increment dirs are never rewritten —
     # O(increment) IO, the Iceberg-append semantics), then force the
-    # derived stages, each of which is itself incremental below
+    # derived stages
     out: dict[str, DataFrame] = {}
     out["triples"] = ledger.run_append_stage(
-        spark, "triples", lambda: new_triples, partition_by=["obj_kind"]
+        spark, "triples", lambda: extract_triples(fresh), partition_by=["obj_kind"]
     )
     triples = out["triples"]
-
-    def _entities():
-        if old_entities is not None:
-            # merge committed keyed dictionary with the increment's —
-            # no rescan of old declarations
-            return merge_keyed_entities(
-                old_entities, declared_entities_keyed(new_triples)
-            )
-        return declared_entities_keyed(triples)
-
-    from cimpy_spark.operators.extract import (
-        merge_headers,
-        snapshot_header,
-        snapshot_meta,
-    )
 
     def _meta():
         # keyed first-wins merge: the committed header (min key over
@@ -283,8 +237,6 @@ def ingest_increment(
         if old_hdr is not None:
             hdr = merge_headers(old_hdr, snapshot_header(fresh))
         else:
-            import warnings
-
             warnings.warn(
                 "stale/legacy meta stage: recovering the snapshot header "
                 "from the passed transcripts only — pass the widest "
@@ -295,119 +247,7 @@ def ingest_increment(
         return snapshot_meta(triples, hdr)
 
     out["meta"] = ledger.run_stage(spark, "meta", _meta, force=True)
-
-    out["entities"] = ledger.run_stage(spark, "entities", _entities, force=True)
-    entities = out["entities"]
-
-    n_entities = ledger.records()["entities"]["rows_out"]
-
-    def _linked():
-        if old_linked is not None:
-            # re-join only the increment's refs + the old dangling tail
-            from cimpy_spark.operators.link import incremental_resolve
-
-            new_entities_only = entities.join(
-                old_entities.select("entity_id"), "entity_id", "left_anti"
-            )
-            return incremental_resolve(
-                old_linked,
-                new_triples,
-                entities,
-                new_entities_only,
-                broadcast_dict=n_entities <= 5_000_000,
-            )
-        return resolve_references(
-            triples, entities, broadcast_dict=n_entities <= 5_000_000
-        )
-
-    out["linked"] = ledger.run_stage(spark, "linked", _linked, force=True)
-    out["edges"] = ledger.run_stage(
-        spark, "edges", lambda: edges_from_resolved(out["linked"]), force=True
-    )
-    out["quarantine"] = ledger.run_stage(
-        spark, "quarantine", lambda: quarantine_from_resolved(out["linked"]), force=True
-    )
-
-    def _cmap_full():
-        if old_labels is not None:
-            # incremental CC: only the increment's sameAs links are
-            # iterated; old components arrive pre-contracted
-            from cimpy_spark.operators.canonicalize import incremental_canonical_map
-
-            return incremental_canonical_map(
-                old_labels,
-                entities.select("entity_id"),
-                P.same_links(new_triples),
-            )
-        return canonical_labels(entities, P.same_links(triples))
-
-    out["cmap_full"] = ledger.run_stage(spark, "cmap_full", _cmap_full, force=True)
-    out["cmap"] = ledger.run_stage(
-        spark, "cmap",
-        lambda: entities.join(out["cmap_full"], "entity_id").select(
-            "entity_id", "canonical_id"
-        ),
-        force=True,
-    )
-    cmap = out["cmap"]
-
-    def _canon_edges():
-        if old_canon_edges is not None:
-            from cimpy_spark.operators.canonicalize import (
-                incremental_canonical_edges,
-            )
-
-            # endpoints the increment can have introduced as edges:
-            # the increment's refs, the previously-dangling tail, AND
-            # newly-declared entities (an old resolved edge whose src
-            # was undeclared produces its first canonical row when the
-            # increment declares that src — linking checks only dst)
-            new_refs = new_triples.filter(
-                (F.col("obj_kind") == "ref") & (F.col("pred") != "sameAs")
-            )
-            dangling = old_linked.filter(~F.col("resolved"))
-            new_decls = new_triples.filter(F.col("pred") == "rdf_type").select(
-                F.col("subj").alias("entity_id")
-            )
-            cand = (
-                new_refs.select(F.col("subj").alias("entity_id"))
-                .unionByName(new_refs.select(F.col("obj").alias("entity_id")))
-                .unionByName(dangling.select(F.col("src").alias("entity_id")))
-                .unionByName(dangling.select(F.col("dst").alias("entity_id")))
-                .unionByName(new_decls)
-                .distinct()
-            )
-            return incremental_canonical_edges(
-                old_canon_edges,
-                out["edges"],
-                cand,
-                old_labels,
-                out["cmap_full"],
-                cmap,
-                cmap_rows=ledger.records()["cmap_full"]["rows_out"],
-            )
-        return canonical_edges(out["edges"], cmap)
-
-    out["canon_edges"] = ledger.run_stage(
-        spark, "canon_edges", _canon_edges, partition_by=["pred"], force=True
-    )
-
-    def _nodes():
-        if old_nodes is not None:
-            # touched-component re-election only; cmap_rows from the
-            # ledger governs broadcast vs shuffled joins at scale
-            from cimpy_spark.operators.canonicalize import incremental_canonical_nodes
-
-            return incremental_canonical_nodes(
-                old_nodes, triples, new_triples, old_labels, out["cmap_full"],
-                entities,
-                cmap_rows=ledger.records()["cmap_full"]["rows_out"],
-            )
-        return canonical_nodes(triples, cmap)
-
-    out["nodes"] = ledger.run_stage(
-        spark, "nodes", _nodes, partition_by=["profile", "attr"], force=True
-    )
+    out.update(_derived_stages(spark, ledger, triples, force=True))
     return out
 
 

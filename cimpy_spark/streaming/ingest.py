@@ -8,9 +8,11 @@ flow through the *identical* extraction operator — ``extract_triples``
 is narrow and stream-safe, so batch and streaming share one code path
 (no semantic drift between the two).
 
-Downstream linking/canonicalization stay batch-incremental per the
-north_rule (resume via committed snapshots, cimpy_spark/plans): CC is
-iterative and not expressible as a single always-incremental stream.
+Downstream linking/canonicalization stay batch stages over the
+committed triple snapshot (resume via committed snapshots,
+cimpy_spark/plans): CC is iterative and not expressible as a single
+always-incremental stream, so each micro-batch appends its triples
+and recomputes the derived stages with the batch pipeline's own code.
 The streaming surface here covers ingestion + per-window monitoring
 aggregates with watermarked late-data handling.
 """
@@ -110,10 +112,11 @@ def conversation_state(transcripts: DataFrame) -> DataFrame:
 def stream_ingest(spark, input_dir: str, out_dir: str):
     """Streaming KG maintenance end-to-end: each micro-batch of
     transcript files flows through the SAME batch-incremental ingest
-    (extract only unseen conversations, append-only triples,
-    incremental link/CC/node stages) via ``foreachBatch`` — the Spark
-    pattern for transactional/stateful sinks that Structured Streaming
-    can't express declaratively.
+    (extract only unseen conversations, append-only triples, keyed
+    header merge, then `run_pipeline`'s derived stages forced over the
+    whole snapshot) via ``foreachBatch`` — the Spark pattern for
+    transactional/stateful sinks that Structured Streaming can't
+    express declaratively.
 
     Arrival invariant: a conversation must arrive atomically within
     one micro-batch (stage input files partitioned by conv_id; the

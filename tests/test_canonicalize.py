@@ -82,38 +82,3 @@ def test_small_and_distributed_cc_paths_identical(spark):
     }
     assert fast == loop and len(fast) > 0
     triples.unpersist()
-
-
-def test_incremental_cc_merges_across_old_components(spark):
-    from cimpy_spark.operators.canonicalize import incremental_canonical_map
-
-    # committed state: {a1,a2}→a1, {b1,b2}→b1, {z}→z
-    old = _df(
-        spark,
-        [("a1", "a1"), ("a2", "a1"), ("b1", "b1"), ("b2", "b1"), ("z", "z")],
-        "entity_id string, canonical_id string",
-    )
-    # increment: new entity n1; link bridging A and B via members (not
-    # canonical reps), plus n1 into B
-    new_ents = _df(spark, [("n1",)], "entity_id string")
-    links = _df(spark, [("a2", "b2"), ("n1", "b1")], "src string, dst string")
-    got = {
-        r["entity_id"]: r["canonical_id"]
-        for r in incremental_canonical_map(old, new_ents, links).collect()
-    }
-    assert got == {
-        "a1": "a1", "a2": "a1", "b1": "a1", "b2": "a1", "n1": "a1", "z": "z",
-    }
-
-
-def test_incremental_cc_noop_without_links(spark):
-    from cimpy_spark.operators.canonicalize import incremental_canonical_map
-
-    old = _df(spark, [("a", "a"), ("b", "a")], "entity_id string, canonical_id string")
-    new_ents = _df(spark, [("c",)], "entity_id string")
-    links = spark.createDataFrame([], "src string, dst string")
-    got = {
-        r["entity_id"]: r["canonical_id"]
-        for r in incremental_canonical_map(old, new_ents, links).collect()
-    }
-    assert got == {"a": "a", "b": "a", "c": "c"}

@@ -139,6 +139,16 @@ def test_max_bucket_bounds_boilerplate_pairs(spark):
     assert D.minhash_candidates(docs, max_bucket=10**9).count() == 120 * 119 // 2 + 1
 
 
+def test_bucket_pairs_repeated_id_yields_no_self_pair(spark):
+    """An id repeated inside one bucket must emit neither (x, x) nor a
+    duplicate pair: ids [7, 7, 9] yield only (7, 9)."""
+    keys = spark.createDataFrame(
+        [(0, 1, 7), (0, 1, 7), (0, 1, 9)], "band int, band_key long, doc_id long"
+    )
+    rows = D.bucket_pairs(keys, ["band", "band_key"], max_bucket=32).collect()
+    assert [(r["doc_a"], r["doc_b"]) for r in rows] == [(7, 9)]
+
+
 def test_neardup_max_bucket_bounds_degenerate_pairs(spark, emb):
     """A degenerate LSH bucket (many copies of one vector) is dropped
     by the cap instead of producing O(n²) candidate pairs."""

@@ -44,8 +44,9 @@ def test_incremental_equals_full(spark, tmp_path):
 
 def test_crash_between_triples_and_cmap_commits(spark, tmp_path):
     """A crash after the increment's triples commit but before its
-    cmap_full commit must NOT let the next run trust the stale
-    labeling (it would silently drop the increment's sameAs merges)."""
+    derived commits must not leave the next run with stale derived
+    stages (a stale labeling would silently drop the increment's
+    sameAs merges)."""
     from cimpy_spark.operators.extract import extract_triples
     from cimpy_spark.plans.lineage import LineageLedger
 
@@ -70,9 +71,10 @@ def test_crash_between_triples_and_cmap_commits(spark, tmp_path):
         spark, "triples", lambda: new_triples, partition_by=["obj_kind"]
     )
 
-    # resume: must detect the stale cmap_full and recompute fully —
-    # and WARN that the snapshot header is being recovered from the
-    # passed transcripts (the stale-meta path, materialize.py)
+    # resume: the derived stages are recomputed over every committed
+    # increment — and the run WARNs that the snapshot header is being
+    # recovered from the passed transcripts (the stale-meta path,
+    # materialize.py)
     with pytest.warns(UserWarning, match="stale/legacy meta"):
         res = ingest_increment(spark, t, d)
     full = run_pipeline(spark, t, str(tmp_path / "full"))
@@ -81,34 +83,109 @@ def test_crash_between_triples_and_cmap_commits(spark, tmp_path):
         assert full[stage].exceptAll(res[stage]).count() == 0, stage
 
 
-def test_incremental_nodes_exclude_undeclared_aliases(spark, tmp_path):
-    """The election membership must be the DECLARED restriction in the
-    incremental path too: an about-mention of a never-declared alias
-    (merged via sameAs) participates in neither the full run's
-    election nor the incremental one."""
-    rows1 = [
-        ("a1", 0, "user", "«decl E1 type:T1 p_int=5 p_bool=true p_enum=kind:Unit.V1»", None),
-        ("a1", 1, "user", "«same E1 E9»", None),  # E9 never declared
-        ("a1", 2, "user", "«about E9 q_int=7»", None),  # must NOT elect
-    ]
-    rows2 = [
-        ("b1", 0, "user", "«about E1 q_str=s2»", None),  # touches E1's component
-        ("b1", 1, "user", "«decl E2 type:T2 p_int=1 p_bool=false p_enum=kind:Unit.V0»", None),
-    ]
+def _decl(e: str, t: str) -> str:
+    return f"«decl {e} type:{t} p_int=1 p_bool=true p_enum=kind:Unit.V1»"
+
+
+# (first batch, second batch, check on the incremental result). Each
+# batch is a list of (conv_id, mention) turns; the second batch's
+# conversations are new, as the seen-conversation skip requires.
+INCREMENT_CASES = {
+    # an about-mention of a never-declared alias (merged via sameAs)
+    # elects in neither run: node membership is the DECLARED restriction
+    "undeclared_alias": (
+        [
+            ("a1", "«decl E1 type:T1 p_int=5 p_bool=true p_enum=kind:Unit.V1»"),
+            ("a1", "«same E1 E9»"),  # E9 never declared
+            ("a1", "«about E9 q_int=7»"),  # must NOT elect
+        ],
+        [
+            ("b1", "«about E1 q_str=s2»"),  # touches E1's component
+            ("b1", "«decl E2 type:T2 p_int=1 p_bool=false p_enum=kind:Unit.V0»"),
+        ],
+        lambda res: not any(
+            r["attr"] == "q_int" and r["value"] == "7" for r in res["nodes"].collect()
+        ),
+    ),
+    # the increment's sameAs joins two committed components through
+    # their NON-representative members (E12, E22) and adds a new member
+    # to one of them: every member, old and new, relabels to E11, and
+    # a committed edge into the losing component is rewritten
+    "cc_bridge_via_members": (
+        [
+            ("a1", _decl("E11", "T1")),
+            ("a1", _decl("E12", "T1")),
+            ("a1", "«same E11 E12»"),
+            ("a2", _decl("E21", "T2")),
+            ("a2", _decl("E22", "T2")),
+            ("a2", "«same E22 E21»"),
+            ("a3", _decl("E90", "T3")),
+            ("a3", "«rel E90 feeds E22»"),
+        ],
+        [
+            ("b1", "«same E12 E22»"),
+            ("b1", _decl("E30", "T2")),
+            ("b1", "«same E30 E21»"),
+            ("b1", "«about E22 q_str=late»"),
+        ],
+        lambda res: (
+            {r["entity_id"]: r["canonical_id"] for r in res["cmap"].collect()}
+            == {e: "E11" for e in ("E11", "E12", "E21", "E22", "E30")} | {"E90": "E90"}
+            and {tuple(r) for r in res["canon_edges"].select("src", "pred", "dst").collect()}
+            == {("E90", "feeds", "E11")}
+        ),
+    ),
+    # a committed dangling ref whose target the increment declares, and
+    # a committed resolved edge whose src only the increment declares:
+    # both become canonical edges, and the quarantine empties
+    "late_declarations": (
+        [
+            ("a1", _decl("E1", "T1")),
+            ("a1", "«rel E1 r1 E5»"),  # E5 undeclared: quarantined
+            ("a2", _decl("E6", "T1")),
+            ("a2", "«rel E7 r2 E6»"),  # resolved, but src E7 undeclared
+        ],
+        [
+            ("b1", _decl("E5", "T2")),
+            ("b1", _decl("E7", "T3")),
+        ],
+        lambda res: (
+            res["quarantine"].count() == 0
+            and {tuple(r) for r in res["canon_edges"].select("src", "pred", "dst").collect()}
+            == {("E1", "r1", "E5"), ("E7", "r2", "E6")}
+        ),
+    ),
+}
+
+
+def _turns(spark, batch):
+    rows, next_turn = [], {}
+    for conv, text in batch:
+        i = next_turn[conv] = next_turn.get(conv, -1) + 1
+        rows.append((conv, i, "user", text, None))
     schema = "conv_id string, turn_idx int, role string, text string, tool string"
-    t1 = spark.createDataFrame(rows1, schema)
-    t_all = spark.createDataFrame(rows1 + rows2, schema)
+    return spark.createDataFrame(rows, schema)
+
+
+@pytest.mark.parametrize("case", list(INCREMENT_CASES))
+def test_increment_edge_cases_match_full_run(spark, tmp_path, case):
+    """A second increment that merges, resolves or declares into the
+    committed graph leaves every derived stage equal to one full run
+    over both batches."""
+    first, second, check = INCREMENT_CASES[case]
+    t1 = _turns(spark, first)
+    t_all = _turns(spark, first + second)
 
     inc_dir, full_dir = str(tmp_path / "i"), str(tmp_path / "f")
     ingest_increment(spark, t1, inc_dir)
     res_inc = ingest_increment(spark, t_all, inc_dir)
     res_full = run_pipeline(spark, t_all, full_dir)
 
-    inc_nodes = {tuple(r) for r in res_inc["nodes"].collect()}
-    full_nodes = {tuple(r) for r in res_full["nodes"].collect()}
-    assert inc_nodes == full_nodes
-    # the undeclared alias's attr is absent everywhere
-    assert not any(n[1] == "q_int" and n[2] == "7" for n in inc_nodes)
+    for stage in ["entities", "edges", "quarantine", "cmap", "canon_edges", "nodes"]:
+        a = sorted(tuple(r) for r in res_inc[stage].collect())
+        b = sorted(tuple(r) for r in res_full[stage].select(*res_inc[stage].columns).collect())
+        assert a == b, stage
+    assert check(res_inc)
 
 
 def test_triples_append_only_no_rewrite(spark, tmp_path):
