@@ -324,6 +324,62 @@ def ngram_jaccard(docs: DataFrame, pairs: DataFrame) -> DataFrame:
     )
 
 
+def _min_id_clusters(op: str, corpus: DataFrame, id_col: str, verified) -> DataFrame:
+    """The id-to-cluster tail shared by every LSH dedup entry point
+    (`dedup_corpus`, `dedup_ingest` and their embedding mirrors):
+    connected components over the verified duplicate pairs via the
+    SAME CC operator the KG pipeline uses (transitive: A≈B≈C collapses
+    to one cluster), then canonical election — min id per cluster
+    survives.
+
+    Ids (non-negative int64) are zero-padded to 20 digits for the CC
+    operator so lexicographic min == numeric min across the full
+    non-negative int64 range. A negative id would format as '-000…'
+    and silently mis-order against numeric min, so the contract is
+    ENFORCED, not just documented: a limit-1 probe on `corpus` (filter
+    pushed to the scan, stops at the first hit) fails fast BEFORE
+    `verified()` schedules any dedup work or commits any ingest stage.
+    `verified()` returns (ids, pairs): the one-column id universe to
+    label and the two-column (a < b) verified pair frame. Output:
+    (id_col, canonical_<id_col>, is_kept)."""
+    from cimpy_spark.operators.canonicalize import canonical_map
+
+    if corpus.filter(F.col(id_col) < 0).limit(1).count() > 0:
+        raise ValueError(
+            f"{op} requires non-negative {id_col} (zero-padded "
+            f"lexicographic ordering == numeric ordering); found {id_col} < 0"
+        )
+    ids, pairs = verified()
+    a, b = pairs.columns
+    pad = "%020d"  # int64 max is 19 digits — padding must cover it
+    # materialize the verified pairs ONCE, in parallel, before handing
+    # them to the CC operator: its small-graph limit-probe otherwise
+    # re-executes the (expensive) candidate+verify plan incrementally
+    # (measured 48s -> ~8s at sf0.1)
+    links = checkpoint_df(
+        pairs.select(
+            F.format_string(pad, a).alias("src"),
+            F.format_string(pad, b).alias("dst"),
+        )
+    )
+    # r8: canonical_map, not canonical_labels + rejoin — every link
+    # endpoint IS an id of the labeled universe, so the lossless
+    # all-vertex labeling restricted back to `ids` equals the
+    # declared-only map, and the declared path is ONE broadcast join
+    # over ONE scan of `ids` (the labels+rejoin shape re-scanned the
+    # corpus ~3× and built two extra broadcasts for an endpoint_only
+    # set that is empty here by construction). Row-identical (pinned
+    # by the unchanged oracles).
+    labels = canonical_map(
+        ids.select(F.format_string(pad, id_col).alias("entity_id")), links
+    )
+    canon = f"canonical_{id_col}"
+    return labels.select(
+        F.col("entity_id").cast("bigint").alias(id_col),
+        F.col("canonical_id").cast("bigint").alias(canon),
+    ).withColumn("is_kept", F.col(id_col) == F.col(canon))
+
+
 def dedup_corpus(
     docs: DataFrame,
     threshold: float = 0.8,
@@ -337,58 +393,21 @@ def dedup_corpus(
 
     1. LSH candidate generation (bucketed, max_bucket-capped),
     2. exact n-gram Jaccard verify at `threshold`,
-    3. connected components over the verified dup pairs (transitive:
-       A≈B≈C collapses to one cluster) via the SAME CC operator the
-       KG pipeline uses — union-find fast path under 1M pairs,
-       pointer-jumping loop above,
-    4. canonical election: min doc_id per cluster survives.
+    3. connected components over the verified dup pairs and canonical
+       election (min doc_id per cluster survives) — the shared
+       `_min_id_clusters` tail, which also enforces the non-negative
+       doc_id contract before any dedup work is scheduled.
 
-    Doc ids (non-negative int64) are zero-padded to 20 digits for the
-    CC operator so lexicographic min == numeric min across the full
-    non-negative int64 range. A negative doc_id would format as
-    '-000…' and silently mis-order against numeric min, so the
-    contract is ENFORCED, not just documented: a limit-1 probe (filter
-    pushed to the scan, stops at the first hit) fails fast before any
-    dedup work is scheduled. Output: (doc_id, canonical_doc_id,
-    is_kept).
+    Output: (doc_id, canonical_doc_id, is_kept).
     """
-    from cimpy_spark.operators.canonicalize import canonical_map
 
-    if docs.filter(F.col("doc_id") < 0).limit(1).count() > 0:
-        raise ValueError(
-            "dedup_corpus requires non-negative doc_id (zero-padded "
-            "lexicographic ordering == numeric ordering); found doc_id < 0"
-        )
-    dup_pairs = ngram_jaccard(
-        docs, minhash_candidates(docs, n_hashes, n_bands, max_bucket, family)
-    ).filter(F.col("jaccard") >= threshold)
-    pad = "%020d"  # int64 max is 19 digits — padding must cover it
-    # materialize the verified pairs ONCE, in parallel, before handing
-    # them to the CC operator: its small-graph limit-probe otherwise
-    # re-executes this (expensive) candidate+verify plan incrementally
-    # (measured 48s -> ~8s at sf0.1)
-    links = checkpoint_df(
-        dup_pairs.select(
-            F.format_string(pad, "doc_a").alias("src"),
-            F.format_string(pad, "doc_b").alias("dst"),
-        )
-    )
-    ids = docs.select(F.format_string(pad, "doc_id").alias("entity_id"))
-    # r8: canonical_map, not canonical_labels + rejoin — every link
-    # endpoint IS a corpus doc_id, so the lossless all-vertex labeling
-    # restricted back to `ids` equals the declared-only map, and the
-    # declared path is ONE broadcast join over ONE scan of `ids`
-    # (the labels+rejoin shape re-scanned the corpus ~3× and built two
-    # extra broadcasts for an endpoint_only set that is empty here by
-    # construction). Row-identical (pinned by the unchanged oracle).
-    labels = canonical_map(ids, links)
-    return (
-        labels.select(
-            F.col("entity_id").cast("bigint").alias("doc_id"),
-            F.col("canonical_id").cast("bigint").alias("canonical_doc_id"),
-        )
-        .withColumn("is_kept", F.col("doc_id") == F.col("canonical_doc_id"))
-    )
+    def verified():
+        dup_pairs = ngram_jaccard(
+            docs, minhash_candidates(docs, n_hashes, n_bands, max_bucket, family)
+        ).filter(F.col("jaccard") >= threshold)
+        return docs.select("doc_id"), dup_pairs.select("doc_a", "doc_b")
+
+    return _min_id_clusters("dedup_corpus", docs, "doc_id", verified)
 
 
 def dup_cluster_stats(
@@ -763,6 +782,154 @@ def _require_widest_corpus(
         )
 
 
+def _lsh_ingest(
+    spark,
+    corpus: DataFrame,
+    out_dir: str,
+    op: str,
+    id_col: str,
+    pair_cols: tuple[str, str],
+    keys: dict[str, str],
+    stages: tuple[str, str, str],
+    build_keys,
+    verify,
+    score_col: str,
+    threshold: float,
+    max_bucket: int,
+    broadcast_touched_max: int,
+) -> tuple[DataFrame, DataFrame]:
+    """The incremental-arrival protocol shared by `dedup_ingest` and
+    `similarity.emb_ingest`: per arriving batch, key only the NEW rows
+    and re-pair only the buckets the batch touched. Returns (ids,
+    verified pairs) for the `_min_id_clusters` tail.
+
+    `corpus` is the widest frame available, (id_col, payload…);
+    `keys` maps the bucket key columns to their SQL types;
+    `build_keys(fresh)` returns (id_col, *keys) rows for the unseen
+    rows, a row with null keys recording an id that has no bucket;
+    `verify(corpus, pairs)` scores (a, b) pairs as (a, b, score_col).
+    The three committed `stages` under `out_dir` (LineageLedger, same
+    crash-retry/commit semantics as the KG pipeline) are:
+
+    - arrivals (append): ONE atomic commit per batch carrying both the
+      arrival record and the bucket keys, so there is NO window where
+      an id is "seen" but unkeyed (or keyed but unseen): a crash
+      before the commit re-ingests the whole batch, after it skips the
+      whole batch. Its distinct ids are the labeled universe.
+    - pairs (snapshot): candidate pairs WITH bucket-key provenance.
+      Rebuilt per ingest as: pairs of UNCHANGED buckets carried
+      verbatim + pairs of TOUCHED buckets recomputed against the
+      bucket's CURRENT size. Provenance is what makes the `max_bucket`
+      cap exact under growth: a bucket that crosses the cap in a later
+      batch retro-drops the pairs it justified — matching the one-shot
+      semantics bit for bit. STALENESS GUARD: if the committed
+      snapshot predates the latest arrivals commit (a crash landed
+      between the two), every bucket is treated as touched — one full
+      re-pair recovery run restores exactness.
+    - scores (append): the verified score per candidate pair — rows
+      are immutable, so a pair is verified ONCE ever; later ingests
+      reuse the cached value. A crash before this commit self-heals:
+      the missing pairs are re-verified on the next run (anti-join
+      against the cache)."""
+    from cimpy_spark.plans.lineage import LineageLedger
+
+    ledger = LineageLedger(out_dir)
+    a, b = pair_cols
+    key_cols = list(keys)
+    key_ddl = ", ".join(f"{c} {t}" for c, t in keys.items())
+    arrivals_stage, pairs_stage, scores_stage = stages
+    arrival_schema = f"{id_col} long, {key_ddl}"
+    keyed = F.col(key_cols[0]).isNotNull()
+
+    booted = ledger.is_append_committed(arrivals_stage)
+    # staleness BEFORE this batch's append: a crash between a previous
+    # arrivals commit and its pairs rewrite leaves a pair snapshot
+    # that never saw those keys — recover with a full re-pair
+    pairs_usable = (
+        booted
+        and ledger.is_committed(pairs_stage)
+        and ledger.committed_after(pairs_stage, arrivals_stage)
+    )
+    if booted:
+        seen_ids = ledger.read_append_stage(
+            spark, arrivals_stage, arrival_schema
+        ).select(id_col).distinct()
+        fresh = checkpoint_df(corpus.join(seen_ids, id_col, "left_anti"))
+    else:
+        fresh = corpus
+
+    arrivals = ledger.run_append_stage(
+        spark, arrivals_stage, lambda: build_keys(fresh), reset=not booted
+    )
+    all_keys = arrivals.filter(keyed)
+    # this batch's keys, read back from the JUST-committed increment
+    # (no key refold)
+    fresh_keys = spark.read.schema(arrival_schema).parquet(
+        ledger.append_increments(arrivals_stage)[-1]
+    ).filter(keyed)
+
+    # buckets touched by this batch: re-pair them against CURRENT
+    # contents; every other bucket's pairs carry over verbatim. With a
+    # stale/missing pair snapshot, EVERY bucket is touched (recovery).
+    pair_schema = f"{key_ddl}, {a} long, {b} long"
+    if pairs_usable:
+        touched = fresh_keys.select(*key_cols).distinct()
+        # size gate for the touched-side broadcast (see _touched_joins).
+        # The just-committed arrivals increment holds one row per (id,
+        # bucket) for keyed ids PLUS one null-key row per keyless id,
+        # so its ledger row count is >= |distinct keys| = |touched|.
+        # Gating on it is therefore CONSERVATIVE (it can only
+        # over-count, pushing borderline batches to the repartition
+        # path, never an oversized broadcast) — free metadata, no
+        # extra job.
+        batch_keys = ledger.last_increment_rows(arrivals_stage)
+        # materialize EAGERLY: the pairs force-write below overwrites
+        # the very snapshot this reads (same hazard as the KG side's
+        # cmap_full, materialize.py)
+        old_pairs = checkpoint_df(
+            spark.read.schema(pair_schema).parquet(ledger.stage_dir(pairs_stage))
+        )
+        carried, in_touched = _touched_joins(
+            old_pairs,
+            all_keys,
+            touched,
+            key_cols,
+            batch_keys <= broadcast_touched_max,
+        )
+    else:
+        # bootstrap or recovery: every bucket re-pairs — no broadcast
+        # of the (corpus-sized) bucket list, the keys ARE the input
+        carried = spark.createDataFrame([], pair_schema)
+        in_touched = all_keys
+    # r8: in-row pair generation with inline cap filter (bucket_pairs)
+    # — in_touched is consumed once; provenance keys kept for the
+    # snapshot
+    recomputed = bucket_pairs(
+        in_touched, key_cols, max_bucket, id_col=id_col, keep_keys=True
+    ).select(*key_cols, F.col("doc_a").alias(a), F.col("doc_b").alias(b))
+
+    pairs_prov = ledger.run_stage(
+        spark, pairs_stage, lambda: carried.unionByName(recomputed), force=True
+    )
+    cand = pairs_prov.select(a, b).distinct()
+
+    # verify once ever: rows are immutable, a cached score is final
+    score_schema = f"{a} long, {b} long, {score_col} double"
+    if booted and ledger.is_append_committed(scores_stage):
+        cached = ledger.read_append_stage(spark, scores_stage, score_schema)
+        new_pairs = cand.join(cached, [a, b], "left_anti")
+    else:
+        new_pairs = cand
+    _require_widest_corpus(corpus, new_pairs, id_col, pair_cols, op)
+    new_scores = verify(corpus, new_pairs)
+    all_scores = ledger.run_append_stage(
+        spark, scores_stage, lambda: new_scores, reset=not booted
+    )
+
+    links = cand.join(all_scores, [a, b]).filter(F.col(score_col) >= threshold)
+    return arrivals.select(id_col).distinct(), links.select(a, b)
+
+
 def dedup_ingest(
     spark,
     docs: DataFrame,
@@ -791,31 +958,17 @@ def dedup_ingest(
     unverified pairs reference ids absent from `docs` fails fast
     instead of silently dropping known duplicates at the verify join.
 
-    Committed stages under `out_dir` (LineageLedger, same
-    crash-retry/commit semantics as the KG pipeline):
+    Committed stages under `out_dir` (the `_lsh_ingest` protocol):
 
-    - ``doc_arrivals`` (append): ONE atomic commit per batch carrying
-      both the arrival record and the LSH band keys — shingled docs
-      contribute n_bands key rows, no-shingle docs one null-band row.
-      A single stage means there is NO window where a doc is "seen"
-      but unsigned (or signed but unseen): a crash before the commit
-      re-ingests the whole batch, after it skips the whole batch.
-    - ``doc_pairs`` (snapshot): candidate pairs WITH (band, band_key)
-      provenance. Rebuilt per ingest as: pairs of UNCHANGED buckets
-      carried verbatim + pairs of TOUCHED buckets recomputed against
-      the bucket's CURRENT size. Provenance is what makes the
-      `max_bucket` cap exact under growth: a bucket that crosses the
-      cap in a later batch retro-drops the pairs it justified —
-      matching the one-shot semantics bit for bit (pinned by test
-      with a cap-crossing fixture). STALENESS GUARD: if the committed
-      snapshot predates the latest arrivals commit (a crash landed
-      between the two), every bucket is treated as touched — one full
-      re-pair recovery run restores exactness.
+    - ``doc_arrivals`` (append): doc_id plus the LSH band keys —
+      shingled docs contribute n_bands key rows, no-shingle docs one
+      null-band row.
+    - ``doc_pairs`` (snapshot): candidate pairs with (band, band_key)
+      provenance; a bucket crossing `max_bucket` in a later batch
+      retro-drops its pairs (pinned by test with a cap-crossing
+      fixture).
     - ``doc_jaccard`` (append): verified word-3-gram Jaccard per
-      candidate pair — texts are immutable, so a pair is verified
-      ONCE ever; later ingests reuse the cached value. A crash before
-      this commit self-heals: the missing pairs are re-verified on
-      the next run (anti-join against the cache).
+      candidate pair, computed once ever.
 
     Returns (doc_id, canonical_doc_id, is_kept) over all seen docs —
     identical to `dedup_corpus` of the full corpus (equivalence-
@@ -832,149 +985,41 @@ def dedup_ingest(
     read the other family's parquet with the wrong schema and fail
     loudly at the scan, never silently).
     """
-    from cimpy_spark.operators.canonicalize import canonical_map
-    from cimpy_spark.plans.lineage import LineageLedger
-
-    if docs.filter(F.col("doc_id") < 0).limit(1).count() > 0:
-        raise ValueError(
-            "dedup_ingest requires non-negative doc_id (zero-padded "
-            "lexicographic ordering == numeric ordering); found doc_id < 0"
-        )
-    ledger = LineageLedger(out_dir)
     docs = docs.select("doc_id", "text")
 
-    keys_fn = _band_keys_fn(family)
-    key_type = "bigint" if family == "xxh64" else "string"
-    arrival_schema = f"doc_id long, band int, band_key {key_type}"
-    booted = ledger.is_append_committed("doc_arrivals")
-    # staleness BEFORE this batch's append: a crash between a previous
-    # arrivals commit and its pairs rewrite leaves a pair snapshot
-    # that never saw those keys — recover with a full re-pair
-    pairs_usable = (
-        booted
-        and ledger.is_committed("doc_pairs")
-        and ledger.committed_after("doc_pairs", "doc_arrivals")
-    )
-    if booted:
-        seen_ids = ledger.read_append_stage(
-            spark, "doc_arrivals", arrival_schema
-        ).select("doc_id").distinct()
-        fresh = checkpoint_df(docs.join(seen_ids, "doc_id", "left_anti"))
-    else:
-        fresh = docs
+    def verified():
+        keys_fn = _band_keys_fn(family)
+        key_type = "bigint" if family == "xxh64" else "string"
 
-    def _arrivals():
-        keys = keys_fn(fresh, n_hashes, n_bands)
-        keyless = (
-            fresh.join(keys.select("doc_id").distinct(), "doc_id", "left_anti")
-            .select(
+        def arrival_keys(fresh):
+            keys = keys_fn(fresh, n_hashes, n_bands)
+            keyless = fresh.join(
+                keys.select("doc_id").distinct(), "doc_id", "left_anti"
+            ).select(
                 "doc_id",
                 F.lit(None).cast("int").alias("band"),
                 F.lit(None).cast(key_type).alias("band_key"),
             )
+            return keys.unionByName(keyless)
+
+        return _lsh_ingest(
+            spark,
+            docs,
+            out_dir,
+            op="dedup_ingest",
+            id_col="doc_id",
+            pair_cols=("doc_a", "doc_b"),
+            keys={"band": "int", "band_key": key_type},
+            stages=("doc_arrivals", "doc_pairs", "doc_jaccard"),
+            build_keys=arrival_keys,
+            verify=ngram_jaccard,
+            score_col="jaccard",
+            threshold=threshold,
+            max_bucket=max_bucket,
+            broadcast_touched_max=broadcast_touched_max,
         )
-        return keys.unionByName(keyless)
 
-    arrivals = ledger.run_append_stage(
-        spark, "doc_arrivals", _arrivals, reset=not booted
-    )
-    all_keys = arrivals.filter(F.col("band").isNotNull())
-    # this batch's keys, read back from the JUST-committed increment
-    # (no signature refold)
-    fresh_keys = spark.read.schema(arrival_schema).parquet(
-        ledger.append_increments("doc_arrivals")[-1]
-    ).filter(F.col("band").isNotNull())
-
-    # buckets touched by this batch: re-pair them against CURRENT
-    # contents; every other bucket's pairs carry over verbatim. With a
-    # stale/missing pair snapshot, EVERY bucket is touched (recovery).
-    pair_schema = f"band int, band_key {key_type}, doc_a long, doc_b long"
-    if pairs_usable:
-        touched = fresh_keys.select("band", "band_key").distinct()
-        # size gate for the touched-side broadcast (see _touched_joins).
-        # The bound, stated precisely (review finding asked for this):
-        # the just-committed 'doc_arrivals' increment holds one row per
-        # (doc, band) for banded docs (n_bands rows/doc) PLUS one
-        # keyless row per shingle-less doc, so its ledger row count is
-        # >= the banded key-row count >= |distinct (band, band_key)| =
-        # |touched|. Gating on it is therefore CONSERVATIVE (it can
-        # only over-count, pushing borderline batches to the
-        # repartition path, never an oversized broadcast) — free
-        # metadata, no extra job. emb_ingest gates the same way on its
-        # per-(vec, table) 'emb_keys' increment.
-        batch_keys = ledger.last_increment_rows("doc_arrivals")
-        # materialize EAGERLY: the doc_pairs force-write below
-        # overwrites the very snapshot this reads (same hazard as the
-        # KG side's cmap_full, materialize.py)
-        old_pairs = checkpoint_df(
-            spark.read.schema(pair_schema).parquet(ledger.stage_dir("doc_pairs"))
-        )
-        carried, in_touched = _touched_joins(
-            old_pairs,
-            all_keys,
-            touched,
-            ["band", "band_key"],
-            batch_keys <= broadcast_touched_max,
-        )
-    else:
-        # bootstrap or recovery: every bucket re-pairs — no broadcast
-        # of the (corpus-sized) bucket list, the keys ARE the input
-        carried = spark.createDataFrame([], pair_schema)
-        in_touched = all_keys
-    # r8: in-row pair generation with inline cap filter (bucket_pairs)
-    # — in_touched is consumed once, so the previous 4-consumer
-    # checkpoint + count/anti-join/self-join machinery collapses to
-    # one grouped aggregation; provenance keys kept for the snapshot
-    recomputed = bucket_pairs(
-        in_touched, ["band", "band_key"], max_bucket, keep_keys=True
-    )
-
-    def _pairs():
-        return carried.unionByName(recomputed)
-
-    pairs_prov = ledger.run_stage(spark, "doc_pairs", _pairs, force=True)
-    cand = pairs_prov.select("doc_a", "doc_b").distinct()
-
-    # verify once ever: texts are immutable, cached Jaccard is final
-    jac_schema = "doc_a long, doc_b long, jaccard double"
-    if booted and ledger.is_append_committed("doc_jaccard"):
-        cached = ledger.read_append_stage(spark, "doc_jaccard", jac_schema)
-        new_pairs = cand.join(cached, ["doc_a", "doc_b"], "left_anti")
-    else:
-        new_pairs = cand
-    _require_widest_corpus(
-        docs, new_pairs, "doc_id", ("doc_a", "doc_b"), "dedup_ingest"
-    )
-    new_jac = ngram_jaccard(docs, new_pairs)
-    all_jac = ledger.run_append_stage(
-        spark, "doc_jaccard", lambda: new_jac, reset=not booted
-    )
-
-    links = (
-        cand.join(all_jac, ["doc_a", "doc_b"])
-        .filter(F.col("jaccard") >= threshold)
-    )
-    pad = "%020d"
-    links_p = checkpoint_df(
-        links.select(
-            F.format_string(pad, "doc_a").alias("src"),
-            F.format_string(pad, "doc_b").alias("dst"),
-        )
-    )
-    ids = arrivals.select("doc_id").distinct().select(
-        F.format_string(pad, "doc_id").alias("entity_id")
-    )
-    # r8: canonical_map, not canonical_labels + rejoin — pair
-    # endpoints are always seen doc_ids, so the declared-only map is
-    # the same row set with one broadcast join less (see dedup_corpus)
-    labels = canonical_map(ids, links_p)
-    return (
-        labels.select(
-            F.col("entity_id").cast("bigint").alias("doc_id"),
-            F.col("canonical_id").cast("bigint").alias("canonical_doc_id"),
-        )
-        .withColumn("is_kept", F.col("doc_id") == F.col("canonical_doc_id"))
-    )
+    return _min_id_clusters("dedup_ingest", docs, "doc_id", verified)
 
 
 def setsim_join(

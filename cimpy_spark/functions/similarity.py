@@ -25,6 +25,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from cimpy_spark.functions.dedup import (
+    BROADCAST_TOUCHED_MAX,
+    _lsh_ingest,
+    _min_id_clusters,
+    bucket_pairs,
+    drop_oversize_buckets,
+)
 from cimpy_spark.plans.checkpoints import checkpoint_df
 
 N_PLANES = 8
@@ -472,8 +479,6 @@ def neardup_pairs(
     one 8-plane table and ~0.95 by three (measured, BENCH.md); the cap
     applies per (table, bucket) and the pair set is deduped across
     tables. Output: (vec_a, vec_b, sim)."""
-    from cimpy_spark.functions.dedup import bucket_pairs
-
     # only (vec_id, tbl, bucket) enters the pair machinery — the
     # (wide) embeddings are fetched back by key for the capped
     # candidates. r8: in-row bucket pair generation (bucket_pairs) —
@@ -489,9 +494,18 @@ def neardup_pairs(
         .distinct()
     )
     e = embeddings.select("vec_id", _as_double("embedding").alias("emb"))
-    sims = (
-        cand.join(e.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("ea")), "vec_a")
-        .join(e.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("eb")), "vec_b")
+    sims = _cosine_verify(e, cand)
+    return sims.filter(F.col("sim") >= threshold).select("vec_a", "vec_b", "sim").distinct()
+
+
+def _cosine_verify(emb: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Exact cosine per candidate pair — the verify stage after LSH,
+    shared by `neardup_pairs` and `emb_ingest`: both members' (vec_id,
+    emb) vectors are fetched by key, so verify cost is O(candidates).
+    Output: (vec_a, vec_b, sim 6dp)."""
+    return (
+        pairs.join(emb.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("ea")), "vec_a")
+        .join(emb.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("eb")), "vec_b")
         .select(
             "vec_a",
             "vec_b",
@@ -501,7 +515,6 @@ def neardup_pairs(
             ).alias("sim"),
         )
     )
-    return sims.filter(F.col("sim") >= threshold).select("vec_a", "vec_b", "sim").distinct()
 
 
 def emb_dedup_corpus(
@@ -516,42 +529,18 @@ def emb_dedup_corpus(
 
     1. hyperplane-LSH bucketed candidate pairs, cap-bounded,
     2. exact cosine verify at `threshold`,
-    3. connected components over the verified pairs via the SHARED CC
-       operator (transitive: A≈B≈C collapses to one cluster),
-    4. canonical election: min vec_id per cluster survives.
+    3. connected components over the verified pairs and canonical
+       election (min vec_id per cluster survives) — the shared
+       `dedup._min_id_clusters` tail, with the same enforced
+       non-negative-id contract as dedup_corpus.
 
-    Same non-negative-id contract as dedup_corpus (zero-padded
-    lexicographic == numeric ordering), enforced with the same
-    limit-1 fail-fast probe. Output: (vec_id, canonical_vec_id,
-    is_kept)."""
-    from cimpy_spark.operators.canonicalize import canonical_map
+    Output: (vec_id, canonical_vec_id, is_kept)."""
 
-    if embeddings.filter(F.col("vec_id") < 0).limit(1).count() > 0:
-        raise ValueError(
-            "emb_dedup_corpus requires non-negative vec_id (zero-padded "
-            "lexicographic ordering == numeric ordering); found vec_id < 0"
-        )
-    pairs = neardup_pairs(embeddings, threshold, max_bucket, n_tables)
-    pad = "%020d"  # int64 max is 19 digits — padding must cover it
-    links = checkpoint_df(
-        pairs.select(
-            F.format_string(pad, "vec_a").alias("src"),
-            F.format_string(pad, "vec_b").alias("dst"),
-        )
-    )
-    ids = embeddings.select(F.format_string(pad, "vec_id").alias("entity_id"))
-    # r8: canonical_map, not canonical_labels + rejoin — pair
-    # endpoints are corpus vec_ids, so the declared-only map is the
-    # same row set with one scan + broadcast join less (see
-    # dedup.dedup_corpus for the argument)
-    labels = canonical_map(ids, links)
-    return (
-        labels.select(
-            F.col("entity_id").cast("bigint").alias("vec_id"),
-            F.col("canonical_id").cast("bigint").alias("canonical_vec_id"),
-        )
-        .withColumn("is_kept", F.col("vec_id") == F.col("canonical_vec_id"))
-    )
+    def verified():
+        pairs = neardup_pairs(embeddings, threshold, max_bucket, n_tables)
+        return embeddings.select("vec_id"), pairs.select("vec_a", "vec_b")
+
+    return _min_id_clusters("emb_dedup_corpus", embeddings, "vec_id", verified)
 
 
 def emb_ingest(
@@ -561,173 +550,52 @@ def emb_ingest(
     threshold: float = 0.99,
     max_bucket: int = MAX_BUCKET,
     n_tables: int = 1,
-    broadcast_touched_max: int | None = None,
+    broadcast_touched_max: int = BROADCAST_TOUCHED_MAX,
 ) -> DataFrame:
     """Incremental embedding near-dup dedup — the vector-side mirror
-    of `dedup.dedup_ingest` (same committed-stage design, same
-    exact-equivalence guarantee vs the one-shot `emb_dedup_corpus`):
+    of `dedup.dedup_ingest`: the same `dedup._lsh_ingest` protocol and
+    the same exact-equivalence guarantee vs the one-shot
+    `emb_dedup_corpus`. Committed stages under `out_dir`:
 
     - ``emb_keys``  (append): (vec_id, tbl, bucket) hyperplane-LSH
-      keys of arrived vectors — ONE atomic commit per batch. The
-      bucketer is total (every vector gets n_tables keys), so the key
-      stage doubles as the arrival record: there is no seen/signed
-      inconsistency window, and the id universe for labeling is its
-      distinct vec_id set.
+      keys of arrived vectors. The bucketer is total (every vector
+      gets n_tables keys), so the key stage doubles as the arrival
+      record.
     - ``emb_pairs`` (snapshot): candidate pairs WITH (tbl, bucket)
-      provenance; unchanged buckets carry verbatim, buckets touched
-      by the batch re-pair against CURRENT size — a bucket crossing
-      `max_bucket` later retro-drops the pairs it justified, exactly
-      as the one-shot cap semantics require. STALENESS GUARD: a pair
-      snapshot predating the latest keys commit (crash between the
-      two) triggers a full re-pair recovery run.
-    - ``emb_cos``   (append): verified cosine per candidate pair —
-      vectors are immutable, so a pair is verified ONCE ever; a crash
-      before this commit self-heals (missing pairs re-verify).
+      provenance; a bucket crossing `max_bucket` later retro-drops the
+      pairs it justified.
+    - ``emb_cos``   (append): verified cosine per candidate pair,
+      computed once ever.
 
     `embeddings` is the widest corpus available (committed + batch;
-    seen ids are skipped; contract ENFORCED via
-    `_require_widest_corpus`, fail-fast like the non-negative-id
-    check); old vectors are only read back for the few verify pairs
-    that touch them. Returns (vec_id, canonical_vec_id, is_kept) over
-    all seen vectors.
+    seen ids are skipped; the contract is ENFORCED, fail-fast like the
+    non-negative-id check); old vectors are only read back for the
+    few verify pairs that touch them. Returns (vec_id,
+    canonical_vec_id, is_kept) over all seen vectors.
     """
-    from cimpy_spark.functions.dedup import (
-        BROADCAST_TOUCHED_MAX,
-        _require_widest_corpus,
-        _touched_joins,
-        bucket_pairs,
-    )
-    from cimpy_spark.operators.canonicalize import canonical_map
-    from cimpy_spark.plans.lineage import LineageLedger
-
-    if embeddings.filter(F.col("vec_id") < 0).limit(1).count() > 0:
-        raise ValueError(
-            "emb_ingest requires non-negative vec_id (zero-padded "
-            "lexicographic ordering == numeric ordering); found vec_id < 0"
-        )
-    ledger = LineageLedger(out_dir)
     emb = embeddings.select("vec_id", _as_double("embedding").alias("emb"))
 
-    key_schema = "vec_id long, tbl int, bucket int"
-    booted = ledger.is_append_committed("emb_keys")
-    # staleness BEFORE this batch's append (crash between a previous
-    # keys commit and its pairs rewrite → full re-pair recovery)
-    pairs_usable = (
-        booted
-        and ledger.is_committed("emb_pairs")
-        and ledger.committed_after("emb_pairs", "emb_keys")
-    )
-    if booted:
-        seen_ids = ledger.read_append_stage(
-            spark, "emb_keys", key_schema
-        ).select("vec_id").distinct()
-        fresh = checkpoint_df(emb.join(seen_ids, "vec_id", "left_anti"))
-    else:
-        fresh = emb
-
-    all_keys = ledger.run_append_stage(
-        spark,
-        "emb_keys",
-        lambda: multi_table_buckets(
-            fresh.select("vec_id", F.col("emb").alias("embedding")), n_tables
-        ),
-        reset=not booted,
-    )
-    # this batch's keys, read back from the just-committed increment
-    fresh_keys = spark.read.schema(key_schema).parquet(
-        ledger.append_increments("emb_keys")[-1]
-    )
-
-    pair_schema = "tbl int, bucket int, vec_a long, vec_b long"
-    if pairs_usable:
-        touched = fresh_keys.select("tbl", "bucket").distinct()
-        # size gate for the touched-side broadcast, same discipline as
-        # dedup_ingest (see dedup._touched_joins): |touched| ≤ batch ×
-        # n_tables, read from the just-committed ledger record
-        if broadcast_touched_max is None:
-            broadcast_touched_max = BROADCAST_TOUCHED_MAX
-        batch_keys = ledger.last_increment_rows("emb_keys")
-        # eager: the force-write below overwrites the snapshot read here
-        old_pairs = checkpoint_df(
-            spark.read.schema(pair_schema).parquet(ledger.stage_dir("emb_pairs"))
+    def verified():
+        return _lsh_ingest(
+            spark,
+            emb,
+            out_dir,
+            op="emb_ingest",
+            id_col="vec_id",
+            pair_cols=("vec_a", "vec_b"),
+            keys={"tbl": "int", "bucket": "int"},
+            stages=("emb_keys", "emb_pairs", "emb_cos"),
+            build_keys=lambda fresh: multi_table_buckets(
+                fresh.select("vec_id", F.col("emb").alias("embedding")), n_tables
+            ),
+            verify=_cosine_verify,
+            score_col="sim",
+            threshold=threshold,
+            max_bucket=max_bucket,
+            broadcast_touched_max=broadcast_touched_max,
         )
-        carried, in_touched = _touched_joins(
-            old_pairs,
-            all_keys,
-            touched,
-            ["tbl", "bucket"],
-            batch_keys <= broadcast_touched_max,
-        )
-    else:
-        # bootstrap or recovery: every bucket re-pairs
-        carried = spark.createDataFrame([], pair_schema)
-        in_touched = all_keys
-    # r8: in-row pair generation with inline cap (see dedup_ingest)
-    recomputed = bucket_pairs(
-        in_touched, ["tbl", "bucket"], max_bucket, id_col="vec_id", keep_keys=True
-    ).select(
-        "tbl",
-        "bucket",
-        F.col("doc_a").alias("vec_a"),
-        F.col("doc_b").alias("vec_b"),
-    )
 
-    pairs_prov = ledger.run_stage(
-        spark, "emb_pairs", lambda: carried.unionByName(recomputed), force=True
-    )
-    cand = pairs_prov.select("vec_a", "vec_b").distinct()
-
-    cos_schema = "vec_a long, vec_b long, sim double"
-    if booted and ledger.is_append_committed("emb_cos"):
-        cached = ledger.read_append_stage(spark, "emb_cos", cos_schema)
-        new_pairs = cand.join(cached, ["vec_a", "vec_b"], "left_anti")
-    else:
-        new_pairs = cand
-    _require_widest_corpus(
-        emb.select(F.col("vec_id")), new_pairs, "vec_id",
-        ("vec_a", "vec_b"), "emb_ingest",
-    )
-    new_cos = (
-        checkpoint_df(new_pairs)
-        .join(emb.select(F.col("vec_id").alias("vec_a"), F.col("emb").alias("ea")), "vec_a")
-        .join(emb.select(F.col("vec_id").alias("vec_b"), F.col("emb").alias("eb")), "vec_b")
-        .select(
-            "vec_a",
-            "vec_b",
-            F.round(
-                _dot(F.col("ea"), F.col("eb"))
-                / (_norm(F.col("ea")) * _norm(F.col("eb"))),
-                6,
-            ).alias("sim"),
-        )
-    )
-    all_cos = ledger.run_append_stage(
-        spark, "emb_cos", lambda: new_cos, reset=not booted
-    )
-
-    links = cand.join(all_cos, ["vec_a", "vec_b"]).filter(
-        F.col("sim") >= threshold
-    )
-    pad = "%020d"
-    links_p = checkpoint_df(
-        links.select(
-            F.format_string(pad, "vec_a").alias("src"),
-            F.format_string(pad, "vec_b").alias("dst"),
-        )
-    )
-    ids = all_keys.select("vec_id").distinct().select(
-        F.format_string(pad, "vec_id").alias("entity_id")
-    )
-    # r8: canonical_map, not canonical_labels + rejoin (see
-    # dedup.dedup_corpus — endpoints are seen vec_ids by construction)
-    labels = canonical_map(ids, links_p)
-    return (
-        labels.select(
-            F.col("entity_id").cast("bigint").alias("vec_id"),
-            F.col("canonical_id").cast("bigint").alias("canonical_vec_id"),
-        )
-        .withColumn("is_kept", F.col("vec_id") == F.col("canonical_vec_id"))
-    )
+    return _min_id_clusters("emb_ingest", emb, "vec_id", verified)
 
 
 def emb_contamination(
@@ -762,8 +630,6 @@ def emb_contamination(
     benchmark bucket is a measured problem, and then account for the
     dropped buckets out-of-band.
     """
-    from cimpy_spark.functions.dedup import drop_oversize_buckets
-
     t = train.select("vec_id", _as_double("embedding").alias("emb"))
     b = bench.select(
         F.col("vec_id").alias("bench_id"), _as_double("embedding").alias("bemb")

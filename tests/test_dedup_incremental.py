@@ -1,20 +1,78 @@
-"""Incremental corpus dedup (dedup_ingest): per-batch work touches
-only new docs' signatures and the buckets the batch changed, yet the
-committed result must equal the one-shot `dedup_corpus` of the full
-corpus — including the subtle retro-drop case where a bucket crosses
-`max_bucket` between batches."""
+"""Incremental corpus dedup (dedup_ingest, emb_ingest): per-batch
+work touches only new rows' keys and the buckets the batch changed,
+yet the committed result must equal the one-shot `dedup_corpus` /
+`emb_dedup_corpus` of the full corpus — including the subtle
+retro-drop case where a bucket crosses `max_bucket` between batches.
+Both families run one ingest protocol, so the protocol tests are
+parametrized over both."""
 
 from __future__ import annotations
 
 import shutil
 import tempfile
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
-from cimpy_spark.fixtures.organic import organic_documents
+from cimpy_spark.fixtures.organic import (
+    ORGANIC_COS_THRESHOLD,
+    ORGANIC_N_TABLES,
+    organic_documents,
+    organic_embeddings,
+)
 from cimpy_spark.functions import dedup as D
+from cimpy_spark.functions import similarity as SIM
 from tests.conftest import SF_TINY
+
+_DUP_TEXT = "alpha beta gamma delta epsilon zeta eta theta"
+_DUP_VEC = [1.0, 0.5, 0.25, 0.125]
+
+# one row per dedup family: its ingest and one-shot entry points, its
+# id column, organic corpus, and the two committed stages after the
+# arrivals commit (the crash windows)
+FAMILIES = [
+    pytest.param(
+        SimpleNamespace(
+            ingest=D.dedup_ingest,
+            one_shot=D.dedup_corpus,
+            id_col="doc_id",
+            kw={},
+            organic=lambda spark: organic_documents(
+                spark.read.parquet(f"{SF_TINY}/documents.parquet")
+            ),
+            dups=lambda spark, ids: spark.createDataFrame(
+                [(i, _DUP_TEXT) for i in ids], "doc_id long, text string"
+            ),
+            pairs_stage="doc_pairs",
+            scores_stage="doc_jaccard",
+        ),
+        id="doc",
+    ),
+    pytest.param(
+        SimpleNamespace(
+            ingest=SIM.emb_ingest,
+            one_shot=SIM.emb_dedup_corpus,
+            id_col="vec_id",
+            kw=dict(threshold=ORGANIC_COS_THRESHOLD, n_tables=ORGANIC_N_TABLES),
+            organic=lambda spark: organic_embeddings(
+                spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
+            ),
+            dups=lambda spark, ids: spark.createDataFrame(
+                [(i, _DUP_VEC) for i in ids],
+                "vec_id long, embedding array<double>",
+            ),
+            pairs_stage="emb_pairs",
+            scores_stage="emb_cos",
+        ),
+        id="emb",
+    ),
+]
+
+
+@pytest.fixture(params=FAMILIES)
+def fam(request):
+    return request.param
 
 
 @pytest.fixture()
@@ -25,19 +83,19 @@ def out_dir():
 
 
 def _rows(df):
-    return {
-        (r["doc_id"], r["canonical_doc_id"], r["is_kept"]) for r in df.collect()
-    }
+    """(id, canonical_id, is_kept) rows of either family's output."""
+    return {tuple(r) for r in df.collect()}
 
 
-def test_two_batch_ingest_equals_one_shot(spark, out_dir):
-    docs = organic_documents(
-        spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    ).cache()
-    first = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(2)) == 0
-    D.dedup_ingest(spark, docs.filter(first), out_dir)
-    inc = D.dedup_ingest(spark, docs, out_dir)
-    assert _rows(inc) == _rows(D.dedup_corpus(docs))
+def _first_half(fam):
+    return F.pmod(F.xxhash64(F.col(fam.id_col).cast("string")), F.lit(2)) == 0
+
+
+def test_two_batch_ingest_equals_one_shot(spark, out_dir, fam):
+    corpus = fam.organic(spark).cache()
+    fam.ingest(spark, corpus.filter(_first_half(fam)), out_dir, **fam.kw)
+    inc = fam.ingest(spark, corpus, out_dir, **fam.kw)
+    assert _rows(inc) == _rows(fam.one_shot(corpus, **fam.kw))
 
 
 def test_cap_crossing_bucket_retro_drops_pairs(spark, out_dir):
@@ -101,27 +159,6 @@ def test_second_ingest_is_o_increment(spark, out_dir):
     assert _rows(r3) == _rows(D.dedup_corpus(docs))
 
 
-def test_emb_two_batch_ingest_equals_one_shot(spark, out_dir):
-    from cimpy_spark.fixtures.organic import (
-        ORGANIC_COS_THRESHOLD,
-        ORGANIC_N_TABLES,
-        organic_embeddings,
-    )
-    from cimpy_spark.functions import similarity as SIM
-
-    emb = organic_embeddings(
-        spark.read.parquet(f"{SF_TINY}/embeddings.parquet")
-    ).cache()
-    first = F.pmod(F.xxhash64(F.col("vec_id").cast("string")), F.lit(2)) == 0
-    kw = dict(threshold=ORGANIC_COS_THRESHOLD, n_tables=ORGANIC_N_TABLES)
-    SIM.emb_ingest(spark, emb.filter(first), out_dir, **kw)
-    inc = SIM.emb_ingest(spark, emb, out_dir, **kw)
-    one = SIM.emb_dedup_corpus(emb, **kw)
-    a = {(r["vec_id"], r["canonical_vec_id"], r["is_kept"]) for r in inc.collect()}
-    b = {(r["vec_id"], r["canonical_vec_id"], r["is_kept"]) for r in one.collect()}
-    assert a == b
-
-
 def test_emb_cap_crossing_bucket_retro_drops_pairs(spark, out_dir):
     """Same retro-drop semantics as the doc side: identical vectors
     always share every bucket; once their bucket crosses max_bucket
@@ -169,7 +206,9 @@ def _crash_on_stage(monkeypatch, stage_name, method_name):
     return real
 
 
-def test_crash_between_arrivals_and_pairs_recovers(spark, out_dir, monkeypatch):
+def test_crash_between_arrivals_and_pairs_recovers(
+    spark, out_dir, monkeypatch, fam
+):
     """Crash window: batch-2 arrivals committed, pair snapshot not.
     Without the staleness guard the next run would trust a pair
     snapshot that never saw batch 2's keys and silently drop its
@@ -177,42 +216,39 @@ def test_crash_between_arrivals_and_pairs_recovers(spark, out_dir, monkeypatch):
     one-shot equality."""
     from cimpy_spark.plans.lineage import LineageLedger
 
-    docs = organic_documents(
-        spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    ).cache()
-    first = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(2)) == 0
-    D.dedup_ingest(spark, docs.filter(first), out_dir)
+    corpus = fam.organic(spark).cache()
+    fam.ingest(spark, corpus.filter(_first_half(fam)), out_dir, **fam.kw)
 
-    real = _crash_on_stage(monkeypatch, "doc_pairs", "run_stage")
+    real = _crash_on_stage(monkeypatch, fam.pairs_stage, "run_stage")
     with pytest.raises(RuntimeError, match="injected crash"):
-        D.dedup_ingest(spark, docs, out_dir)
+        fam.ingest(spark, corpus, out_dir, **fam.kw)
     monkeypatch.setattr(LineageLedger, "run_stage", real)
 
     # retry after the crash: arrivals for batch 2 are committed (the
     # seen-skip must NOT re-ingest them) and the stale pair snapshot
     # must NOT be trusted
-    rec = D.dedup_ingest(spark, docs, out_dir)
-    assert _rows(rec) == _rows(D.dedup_corpus(docs))
+    rec = fam.ingest(spark, corpus, out_dir, **fam.kw)
+    assert _rows(rec) == _rows(fam.one_shot(corpus, **fam.kw))
 
 
-def test_crash_before_jaccard_append_self_heals(spark, out_dir, monkeypatch):
-    """Crash window: pair snapshot committed, verify cache not — the
-    missing pairs must simply re-verify on the retry."""
+def test_crash_before_jaccard_append_self_heals(
+    spark, out_dir, monkeypatch, fam
+):
+    """Crash window: pair snapshot committed, verify cache (Jaccard or
+    cosine) not — the missing pairs must simply re-verify on the
+    retry."""
     from cimpy_spark.plans.lineage import LineageLedger
 
-    docs = organic_documents(
-        spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    ).cache()
-    first = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(2)) == 0
-    D.dedup_ingest(spark, docs.filter(first), out_dir)
+    corpus = fam.organic(spark).cache()
+    fam.ingest(spark, corpus.filter(_first_half(fam)), out_dir, **fam.kw)
 
-    real = _crash_on_stage(monkeypatch, "doc_jaccard", "run_append_stage")
+    real = _crash_on_stage(monkeypatch, fam.scores_stage, "run_append_stage")
     with pytest.raises(RuntimeError, match="injected crash"):
-        D.dedup_ingest(spark, docs, out_dir)
+        fam.ingest(spark, corpus, out_dir, **fam.kw)
     monkeypatch.setattr(LineageLedger, "run_append_stage", real)
 
-    rec = D.dedup_ingest(spark, docs, out_dir)
-    assert _rows(rec) == _rows(D.dedup_corpus(docs))
+    rec = fam.ingest(spark, corpus, out_dir, **fam.kw)
+    assert _rows(rec) == _rows(fam.one_shot(corpus, **fam.kw))
 
 
 def test_touched_join_broadcast_gate(spark, out_dir):
@@ -245,43 +281,25 @@ def test_touched_join_broadcast_gate(spark, out_dir):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
 
 
-def test_ingest_shuffle_path_matches_broadcast_path(spark, out_dir):
+def test_ingest_shuffle_path_matches_broadcast_path(spark, out_dir, fam):
     """Forcing the above-gate (shuffle) path end-to-end must leave the
     committed result identical to the broadcast path and to the
     one-shot closed form."""
-    docs = organic_documents(
-        spark.read.parquet(f"{SF_TINY}/documents.parquet")
-    ).cache()
-    first = F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(2)) == 0
-    D.dedup_ingest(spark, docs.filter(first), out_dir, broadcast_touched_max=0)
-    inc = D.dedup_ingest(spark, docs, out_dir, broadcast_touched_max=0)
-    assert _rows(inc) == _rows(D.dedup_corpus(docs))
+    corpus = fam.organic(spark).cache()
+    kw = dict(fam.kw, broadcast_touched_max=0)
+    fam.ingest(spark, corpus.filter(_first_half(fam)), out_dir, **kw)
+    inc = fam.ingest(spark, corpus, out_dir, **kw)
+    assert _rows(inc) == _rows(fam.one_shot(corpus, **fam.kw))
 
 
-def test_ingest_rejects_batch_only_corpus(spark, out_dir):
+def test_ingest_rejects_batch_only_corpus(spark, out_dir, fam):
     """The widest-corpus contract is ENFORCED: a second ingest passed
-    only the new batch (carried pairs then reference absent old docs)
+    only the new batch (carried pairs then reference absent old rows)
     fails fast instead of silently dropping known duplicates at the
     verify join."""
-    text = "alpha beta gamma delta epsilon zeta eta theta"
-    mk = lambda rows: spark.createDataFrame(rows, "doc_id long, text string")
-    batch1 = mk([(0, text), (1, text)])
-    batch2_only = mk([(2, text)])
-    D.dedup_ingest(spark, batch1, out_dir)
+    fam.ingest(spark, fam.dups(spark, [0, 1]), out_dir, **fam.kw)
     with pytest.raises(ValueError, match="widest corpus"):
-        D.dedup_ingest(spark, batch2_only, out_dir)
-
-
-def test_emb_ingest_rejects_batch_only_corpus(spark, out_dir):
-    from cimpy_spark.functions import similarity as SIM
-
-    vec = [1.0, 0.5, 0.25, 0.125]
-    mk = lambda rows: spark.createDataFrame(
-        rows, "vec_id long, embedding array<double>"
-    )
-    SIM.emb_ingest(spark, mk([(0, vec), (1, vec)]), out_dir)
-    with pytest.raises(ValueError, match="widest corpus"):
-        SIM.emb_ingest(spark, mk([(2, vec)]), out_dir)
+        fam.ingest(spark, fam.dups(spark, [2]), out_dir, **fam.kw)
 
 
 def test_broadcast_gate_bounds_touched_from_above(spark, out_dir):

@@ -50,17 +50,29 @@ def duckdb_conn(sf_dir: str):
 
 
 def compare(spark, sf_dir: str, names: list[str] | None = None) -> bool:
+    """Print one status line per selected entry — OK, MISMATCH,
+    SKIPPED (a fixture file the entry needs is missing) or a rows-only
+    line (no oracle) — then an OK=… MISMATCH=… SKIPPED=… tally. True
+    only when every selected entry printed OK: a skip never reads as a
+    pass."""
     import __spark_entry__ as entry_mod
 
     qs = entry_mod.queries()
     oracles = entry_mod.oracle_sql()
     con = duckdb_conn(sf_dir)
-    ok = True
+    counts = {"OK": 0, "MISMATCH": 0, "SKIPPED": 0}
+    selected = 0
     for name, fn in qs.items():
         if names and name not in names:
             continue
-        sdf = fn(spark, sf_dir)
-        srows = sdf.collect()
+        selected += 1
+        try:
+            sdf = fn(spark, sf_dir)
+            srows = sdf.collect()
+        except FileNotFoundError as e:
+            counts["SKIPPED"] += 1
+            print(f"{name}: SKIPPED ({e})")
+            continue
         scols = sdf.columns
         if name not in oracles:
             print(f"{name}: rows-only check, {len(srows)} rows")
@@ -71,8 +83,7 @@ def compare(spark, sf_dir: str, names: list[str] | None = None) -> bool:
         sh = value_hash([tuple(r) for r in srows], scols)
         oh = value_hash(orows, ocols)
         status = "OK" if (sh == oh and len(srows) == len(orows)) else "MISMATCH"
-        if status != "OK":
-            ok = False
+        counts[status] += 1
         print(
             f"{name}: {status} spark_rows={len(srows)} oracle_rows={len(orows)} "
             f"cols={sorted(scols)} vs {sorted(ocols)}"
@@ -84,7 +95,8 @@ def compare(spark, sf_dir: str, names: list[str] | None = None) -> bool:
             oset = {"|".join(_norm(r[i]) for i in order_o) for r in orows}
             print("  spark-only:", list(sset - oset)[:3])
             print("  oracle-only:", list(oset - sset)[:3])
-    return ok
+    print(" ".join(f"{k}={v}" for k, v in counts.items()))
+    return counts["OK"] == selected
 
 
 if __name__ == "__main__":

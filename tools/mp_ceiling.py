@@ -1,10 +1,12 @@
 """Pure-multiprocessing scaling control — the hardware's own ceiling.
 
-Runs the SAME parse kernel the engine uses (the pandas batch parser,
-`extract._parse_batch`) over the same fixture texts with plain
-`multiprocessing` — no Spark, no JVM, no Arrow transfer — at two
-pinned parallelism levels. Whatever efficiency THIS loses 4→16 is the
-single-box memory-system ceiling; the Spark pipeline cannot be
+Runs the SAME parse kernel the engine uses (the Arrow batch parser
+`extract._parse_arrow_batch` that `extract_triples` runs through
+`mapInArrow`) over the same fixture texts, cut into `pa.RecordBatch`
+chunks, with plain `multiprocessing` — no Spark, no JVM, no
+JVM↔Python Arrow transfer — at two pinned parallelism levels.
+Whatever efficiency THIS loses 4→16 is the single-box memory-system
+ceiling; the Spark pipeline cannot be
 expected to beat it, and the honest scaling claim is "Spark tracks
 the hardware curve" (BENCH.md). Re-run whenever the fixture's byte
 profile changes (longer texts = more DRAM pressure per turn).
@@ -22,8 +24,6 @@ import statistics
 import sys
 import time
 
-import numpy as np
-
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
@@ -35,15 +35,15 @@ _chunks = None  # set in parent before fork; children inherit via COW
 
 
 def _work(i: int) -> int:
-    from cimpy_spark.operators.extract import _parse_batch
+    from cimpy_spark.operators.extract import _parse_arrow_batch
 
-    return len(_parse_batch(_chunks[i]))
+    return sum(b.num_rows for b in _parse_arrow_batch(_chunks[i]))
 
 
 def main() -> None:
     global _chunks
     import duckdb
-    import pandas as pd
+    import pyarrow as pa
 
     from cimpy_spark.fixtures.events_transcripts import transcripts_sql
 
@@ -51,12 +51,12 @@ def main() -> None:
     con.execute(
         f"CREATE VIEW events AS SELECT * FROM read_parquet('{SF_DIR}/events.parquet')"
     )
-    base = con.execute(transcripts_sql("events")).df()[
+    base = con.execute(transcripts_sql("events")).arrow().select(
         ["conv_id", "turn_idx", "role", "text"]
-    ]
-    pdf = pd.concat([base] * REP, ignore_index=True)
-    n_turns = len(pdf)
-    _chunks = np.array_split(pdf, N_CHUNKS)
+    )
+    table = pa.concat_tables([base] * REP).combine_chunks()
+    n_turns = table.num_rows
+    _chunks = table.to_batches(max_chunksize=-(-n_turns // N_CHUNKS))
 
     results = {}
     # pin from the CPUs we are actually PERMITTED to use (a restricted
@@ -73,11 +73,11 @@ def main() -> None:
                 continue
             os.sched_setaffinity(0, set(avail[:cores]))
             with mp.Pool(cores) as pool:
-                pool.map(_work, range(N_CHUNKS))  # warmup: fork + import + JIT
+                pool.map(_work, range(len(_chunks)))  # warmup: fork + import + JIT
                 times = []
                 for _ in range(3):
                     t0 = time.perf_counter()
-                    n_triples = sum(pool.map(_work, range(N_CHUNKS)))
+                    n_triples = sum(pool.map(_work, range(len(_chunks))))
                     times.append(time.perf_counter() - t0)
             sec = statistics.median(times)
             results[cores] = {
