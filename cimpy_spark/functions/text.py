@@ -888,7 +888,7 @@ def repetition_score(
     substituted into every consumer by projection collapse with no
     CSE, so the earlier size/array_distinct/size formulation rebuilt
     the gram array ~8× per reference — measured 333s → ~13s for
-    500k docs (tools/curation_scale_bench.py). Ratios rounded to 6dp
+    500k docs (scaling_bench.py repetition_score). Ratios rounded to 6dp
     for cross-engine parity. Output: (doc_id, dup_2gram_frac,
     dup_3gram_frac, repetitive) with `repetitive` = either fraction
     ≥ threshold.

@@ -119,7 +119,7 @@ def repetition_score_arrow(docs: DataFrame, threshold: float = 0.3) -> DataFrame
 
     One dictionary-encode + one lexsort per (batch, n) replaces the
     SQL path's per-row sorted-gram folds; measured ~55s → seconds per
-    500k docs (tools/curation_scale_bench.py, BENCH.md). Narrow plan:
+    500k docs (scaling_bench.py repetition_score_arrow, BENCH.md). Narrow plan:
     project → MapInArrow, zero exchanges."""
 
     def gen(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:

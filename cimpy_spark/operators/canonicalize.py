@@ -24,12 +24,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cimpy_spark.plans.checkpoints import checkpoint_df
+
+# Below this many (undirected, deduped) sameAs links, connected
+# components run as a driver-side union-find over ONE collect — the
+# distributed loop's ~0.5-1s/round fixed job latency dominates real
+# work at small scale (9 rounds ≈ 7s for 600 links). 1M links ≈ tens
+# of MB on the driver — safely collectable; above that, the O(log d)
+# pointer-jumping loop takes over.
+SMALL_LINKS_THRESHOLD = 1_000_000
+
 
 def canonical_map(
     entities: DataFrame,
     same_links: DataFrame,
     max_iter: int = 25,
-    small_threshold: int | None = None,
+    small_threshold: int = SMALL_LINKS_THRESHOLD,
 ) -> DataFrame:
     """(entity_id, canonical_id) for every declared entity.
 
@@ -40,23 +50,13 @@ def canonical_map(
     restriction drops undeclared-endpoint labels anyway, so the full
     lossless labeling is never materialized on this path.
     """
-    threshold = SMALL_LINKS_THRESHOLD if small_threshold is None else small_threshold
     edges_plan = _sym_links(same_links)
-    pairs = _collect_if_small(edges_plan, threshold)
+    pairs = _collect_if_small(edges_plan, small_threshold)
     if pairs is not None:
         ep_map = _union_find_df(entities.sparkSession, pairs)
         return _declared_labels(entities, ep_map)
     labels = _distributed_labels(entities, edges_plan, max_iter)
     return entities.join(labels, "entity_id").select("entity_id", "canonical_id")
-
-
-# Below this many (undirected, deduped) sameAs links, connected
-# components run as a driver-side union-find over ONE collect — the
-# distributed loop's ~0.5-1s/round fixed job latency dominates real
-# work at small scale (9 rounds ≈ 7s for 600 links). 1M links ≈ tens
-# of MB on the driver — safely collectable; above that, the O(log d)
-# pointer-jumping loop takes over.
-SMALL_LINKS_THRESHOLD = 1_000_000
 
 
 def canonical_labels(
@@ -89,7 +89,7 @@ def _distributed_labels(
     """Pointer-jumping min-label loop over a (large) link set — the
     full lossless labeling (every vertex, declared or not)."""
     spark = entities.sparkSession
-    edges = _checkpoint(edges_plan, eager=True)
+    edges = checkpoint_df(edges_plan, eager=True)
     # the count sizes the loop's working set (the link set is usually
     # tiny relative to the corpus; a fixed shuffle width would pay
     # hundreds of near-empty tasks per round)
@@ -103,7 +103,7 @@ def _distributed_labels(
         .union(edges.select("a"))
         .distinct()
     )
-    labels = _checkpoint(
+    labels = checkpoint_df(
         vertices.select("a", F.col("a").alias("comp")).repartition(n_parts, "a"),
         eager=True,
     )
@@ -219,14 +219,6 @@ def _small_graph_labels(entities: DataFrame, pairs) -> DataFrame:
     return declared.unionByName(endpoint_only)
 
 
-def _checkpoint(df: DataFrame, eager: bool = False) -> DataFrame:
-    """Reliable-when-configured materialization (shared policy —
-    see cimpy_spark/plans/checkpoints.py)."""
-    from cimpy_spark.plans.checkpoints import checkpoint_df
-
-    return checkpoint_df(df, eager=eager)
-
-
 def _iterate(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
     for _ in range(max_iter):
         # (a) candidate label = min(own, min over neighbors)
@@ -258,7 +250,7 @@ def _iterate(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
             )
         # lazy checkpoint: the changed-count action below materializes
         # it, so each iteration costs ONE job instead of two
-        new_labels = _checkpoint(jumped, eager=False)
+        new_labels = checkpoint_df(jumped, eager=False)
         changed = (
             new_labels.alias("n")
             .join(labels.alias("o"), "a")

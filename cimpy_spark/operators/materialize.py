@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from cimpy_spark import pipeline as P
 from cimpy_spark.operators.canonicalize import (
+    BROADCAST_MAP_THRESHOLD,
     canonical_edges,
     canonical_labels,
     canonical_nodes,
@@ -112,7 +113,7 @@ def _derived_stages(
     out["linked"] = ledger.run_stage(
         spark, "linked",
         lambda: resolve_references(
-            triples, entities, broadcast_dict=n_entities <= 5_000_000
+            triples, entities, broadcast_dict=n_entities <= BROADCAST_MAP_THRESHOLD
         ),
         force=force,
     )

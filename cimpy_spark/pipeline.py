@@ -403,8 +403,23 @@ def pagerank(
     same way the CC loop does. Output: (entity_id, rank_fp, rank) —
     rank_fp is the exact int64 fixed-point mass, rank the derived
     double (identical in both engines because it is computed from
-    identical integers).
+    identical integers). The loop is `ppr`'s with every node a seed.
     """
+    ranks = _restart_walk(canon_edges, None, iters, scale)
+    return ranks.select(
+        F.col("id").alias("entity_id"),
+        F.col("rank").alias("rank_fp"),
+        (F.col("rank") / F.lit(float(scale))).alias("rank_frac"),
+    )
+
+
+def _restart_walk(
+    canon_edges: DataFrame, seeds: DataFrame | None, iters: int, scale: int
+) -> DataFrame:
+    """The int64 fixed-point random walk with restart behind `ppr` and
+    `pagerank`: teleport and dangling mass return uniformly to the
+    seeds; `seeds=None` makes every node a seed, which is PageRank.
+    Returns (id, is_seed, ns, rank)."""
     from cimpy_spark.plans.checkpoints import checkpoint_df
 
     # materialize the distinct edge list ONCE: every iteration joins
@@ -418,15 +433,29 @@ def pagerank(
         .distinct()
     )
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n1 = nodes.agg(F.count(F.lit(1)).alias("n"))
-    # n rides along as a column (1-row broadcast cross join) so every
+    if seeds is None:
+        marked = nodes.withColumn("is_seed", F.lit(1))
+    else:
+        seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
+        marked = nodes.join(
+            seed_ids.withColumn("is_seed", F.lit(1)), "id", "left"
+        ).select("id", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
+    # ns rides along as a column (1-row broadcast cross join) so every
     # expression below stays a plain column expression
+    ns1 = marked.agg(F.sum("is_seed").alias("ns"))
+    if seeds is not None and (ns1.collect()[0]["ns"] or 0) == 0:
+        raise ValueError("ppr: no seed id is a node of the graph")
     ranks = checkpoint_df(
-        nodes.crossJoin(F.broadcast(n1)).select(
-            "id", "n", F.expr(f"CAST({scale} AS BIGINT) div n").alias("rank")
+        marked.crossJoin(F.broadcast(ns1)).select(
+            "id",
+            "is_seed",
+            "ns",
+            F.expr(f"is_seed * (CAST({scale} AS BIGINT) div ns)").alias(
+                "rank"
+            ),
         )
     )
-    base = f"CAST({3 * scale} AS BIGINT) div (20 * n)"
+    base = f"is_seed * (CAST({3 * scale} AS BIGINT) div (20 * ns))"
     for _ in range(iters):
         r_deg = ranks.join(
             deg.withColumnRenamed("src", "id"), "id", "left"
@@ -445,26 +474,23 @@ def pagerank(
             F.coalesce(F.sum("rank"), F.lit(0)).cast("bigint").alias("dang")
         )
         ranks = checkpoint_df(
-            ranks.select("id", "n")
+            ranks.select("id", "is_seed", "ns")
             .join(contribs, "id", "left")
             .crossJoin(F.broadcast(dang))
             .select(
                 "id",
-                "n",
+                "is_seed",
+                "ns",
                 (
                     F.expr(base)
                     + F.expr(
                         "(17 * (coalesce(contrib, CAST(0 AS BIGINT))"
-                        " + (dang div n))) div 20"
+                        " + is_seed * (dang div ns))) div 20"
                     )
                 ).cast("bigint").alias("rank"),
             )
         )
-    return ranks.select(
-        F.col("id").alias("entity_id"),
-        F.col("rank").alias("rank_fp"),
-        (F.col("rank") / F.lit(float(scale))).alias("rank_frac"),
-    )
+    return ranks
 
 
 def triangle_stats(canon_edges: DataFrame) -> DataFrame:
@@ -2042,67 +2068,7 @@ def ppr(
     keeps lineage O(1). The seed set itself is catalog-sized (a type
     slice / topic list), joined once at init.
     """
-    from cimpy_spark.plans.checkpoints import checkpoint_df
-
-    edges = checkpoint_df(canon_edges.select("src", "dst").distinct())
-    nodes = (
-        edges.select(F.col("src").alias("id"))
-        .unionByName(edges.select(F.col("dst").alias("id")))
-        .distinct()
-    )
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    seed_ids = seeds.select(F.col(seeds.columns[0]).alias("id")).distinct()
-    marked = nodes.join(
-        seed_ids.withColumn("is_seed", F.lit(1)), "id", "left"
-    ).select("id", F.coalesce("is_seed", F.lit(0)).alias("is_seed"))
-    ns1 = marked.agg(F.sum("is_seed").alias("ns"))
-    if (ns1.collect()[0]["ns"] or 0) == 0:
-        raise ValueError("ppr: no seed id is a node of the graph")
-    ranks = checkpoint_df(
-        marked.crossJoin(F.broadcast(ns1)).select(
-            "id",
-            "is_seed",
-            "ns",
-            F.expr(f"is_seed * (CAST({scale} AS BIGINT) div ns)").alias(
-                "rank"
-            ),
-        )
-    )
-    base = f"is_seed * (CAST({3 * scale} AS BIGINT) div (20 * ns))"
-    for _ in range(iters):
-        r_deg = ranks.join(
-            deg.withColumnRenamed("src", "id"), "id", "left"
-        )
-        contribs = (
-            r_deg.filter(F.col("deg").isNotNull())
-            .join(edges, r_deg["id"] == edges["src"])
-            .select(
-                F.col("dst").alias("id"),
-                F.expr("rank div deg").alias("c"),
-            )
-            .groupBy("id")
-            .agg(F.sum("c").alias("contrib"))
-        )
-        dang = r_deg.filter(F.col("deg").isNull()).agg(
-            F.coalesce(F.sum("rank"), F.lit(0)).cast("bigint").alias("dang")
-        )
-        ranks = checkpoint_df(
-            ranks.select("id", "is_seed", "ns")
-            .join(contribs, "id", "left")
-            .crossJoin(F.broadcast(dang))
-            .select(
-                "id",
-                "is_seed",
-                "ns",
-                (
-                    F.expr(base)
-                    + F.expr(
-                        "(17 * (coalesce(contrib, CAST(0 AS BIGINT))"
-                        " + is_seed * (dang div ns))) div 20"
-                    )
-                ).cast("bigint").alias("rank"),
-            )
-        )
+    ranks = _restart_walk(canon_edges, seeds, iters, scale)
     return ranks.select(
         F.col("id").alias("entity_id"),
         F.col("is_seed").cast("int").alias("is_seed"),

@@ -8,63 +8,33 @@ IDENTICAL result hash. That is the property a 100 TB job needs from
 the engine: memory pressure changes the physical execution (external
 sort/aggregation spill paths), never the answer.
 
+The corpus is the scale harness's documents input (scaling_bench.py)
+at x40, 200k docs from sf0.1, staged once under a temporary directory.
 Each level runs in its own subprocess (driver memory is a JVM-launch
-setting). Usage: REP=40 python tools/spill_check.py — prints one
-JSON line.
+setting). Usage: python tools/spill_check.py — prints one JSON line.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
+import tempfile
 import urllib.request
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-SF_DIR = os.environ.get("SF_DIR", "/root/testdata/sf0.1")
-REP = int(os.environ.get("REP", "40"))
-STAGE_DIR = os.environ.get("STAGE_DIR", "/tmp/spill_check_corpus")
-UI_PORT = int(os.environ.get("UI_PORT", "4057"))
+import scaling_bench as SB  # noqa: E402
+from cimpy_spark.functions.dedup import dedup_corpus  # noqa: E402
+from cimpy_spark.session import get_spark  # noqa: E402
+
+SIZES = SB.Sizes().scaled(0.4)  # the harness's x100 documents at x40
+UI_PORT = 4057
 
 
-def stage_corpus() -> None:
-    from pyspark.sql import functions as F
-
-    from cimpy_spark.session import get_spark
-
-    spark = get_spark("spill-stage", cores=32)
-    spark.sparkContext.setLogLevel("ERROR")
-    base = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
-        "doc_id", "text"
-    )
-    reps = spark.range(REP).select(F.col("id").cast("int").alias("rep"))
-    words = F.split(F.trim("text"), r"\s+")
-    mutated = F.array_join(
-        F.transform(
-            words,
-            lambda w, i: F.when(
-                (i % 4 == 3) & (F.col("rep") > 0),
-                F.concat(w, F.lit("_r"), F.col("rep").cast("string")),
-            ).otherwise(w),
-        ),
-        " ",
-    )
-    corpus = base.crossJoin(reps).select(
-        (F.col("doc_id") + F.col("rep") * 10_000_000).alias("doc_id"),
-        mutated.alias("text"),
-    )
-    corpus.repartition(32).write.mode("overwrite").parquet(STAGE_DIR)
-    spark.stop()
-
-
-def run_level(mem: str) -> dict:
-    from pyspark.sql import functions as F
-
-    from cimpy_spark.functions.dedup import dedup_corpus
-    from cimpy_spark.session import get_spark
-
+def run_level(mem: str, root: str) -> dict:
     os.environ["SPARK_GRAFT_DRIVER_MEM"] = mem
     spark = get_spark(
         f"spill-{mem}",
@@ -79,12 +49,8 @@ def run_level(mem: str) -> dict:
         },
     )
     spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet(STAGE_DIR)
-    out = dedup_corpus(docs)
-    h = out.select(
-        F.sum(F.pmod(F.xxhash64(*out.columns), F.lit(1_000_000_007))).alias("h")
-    ).collect()[0]["h"]
-    n = out.count()
+    docs = SB.load(spark, "docs", root).docs.select("doc_id", "text")
+    h, n = SB.force(dedup_corpus(docs))
 
     # read the ACTUAL bound UI url — Spark silently binds port+1 on
     # conflict, and querying the configured port could read another
@@ -110,23 +76,30 @@ def run_level(mem: str) -> dict:
 
 def main() -> None:
     if len(sys.argv) > 1 and sys.argv[1] == "--level":
-        print("RESULT " + json.dumps(run_level(sys.argv[2])))
+        print("RESULT " + json.dumps(run_level(sys.argv[2], sys.argv[3])))
         return
 
-    stage_corpus()
-    results = {}
-    for mem in ("8g", "900m"):
-        proc = subprocess.run(
-            [sys.executable, os.path.abspath(__file__), "--level", mem],
-            capture_output=True,
-            text=True,
-            timeout=1800,
-        )
-        line = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")]
-        if not line:
-            print(proc.stdout[-3000:], proc.stderr[-3000:], file=sys.stderr)
-            raise RuntimeError(f"level {mem} failed")
-        results[mem] = json.loads(line[-1][len("RESULT "):])
+    root = tempfile.mkdtemp(prefix="spill_check_")
+    try:
+        spark = get_spark("spill-stage")
+        spark.sparkContext.setLogLevel("ERROR")
+        SB.stage(spark, "docs", SIZES, root)
+        spark.stop()
+        results = {}
+        for mem in ("8g", "900m"):
+            proc = subprocess.run(
+                [sys.executable, os.path.abspath(__file__), "--level", mem, root],
+                capture_output=True,
+                text=True,
+                timeout=1800,
+            )
+            line = [l for l in proc.stdout.splitlines() if l.startswith("RESULT ")]
+            if not line:
+                print(proc.stdout[-3000:], proc.stderr[-3000:], file=sys.stderr)
+                raise RuntimeError(f"level {mem} failed")
+            results[mem] = json.loads(line[-1][len("RESULT "):])
+    finally:
+        shutil.rmtree(root, ignore_errors=True)
 
     starved = results["900m"]
     roomy = results["8g"]
@@ -142,7 +115,8 @@ def main() -> None:
         "starved_spilled_mem_bytes": starved["memory_bytes_spilled"],
         "roomy_spilled_disk_bytes": roomy["disk_bytes_spilled"],
         "levels": results,
-        "rep": REP,
+        "doc_rep": SIZES.doc_rep,
+        "sf_dir": SB.SF_DIR,
     }))
 
 
