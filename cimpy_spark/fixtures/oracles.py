@@ -1325,7 +1325,7 @@ def er_clusters_sql(num: int = 2, den: int = 5) -> str:
     """INDEPENDENT oracle for pipeline.er_clusters: connected
     components over the brute-force match pairs via a recursive-CTE
     reachability closure (cluster id = min reachable entity) — a
-    different algorithm than the engine's union-find/pointer-jumping
+    different algorithm than the engine's per-partition union-find
     labels."""
     return PIPELINE_CTES + f"""
     , {_match_pair_ctes(num, den)},

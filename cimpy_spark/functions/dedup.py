@@ -352,15 +352,11 @@ def _min_id_clusters(op: str, corpus: DataFrame, id_col: str, verified) -> DataF
     ids, pairs = verified()
     a, b = pairs.columns
     pad = "%020d"  # int64 max is 19 digits — padding must cover it
-    # materialize the verified pairs ONCE, in parallel, before handing
-    # them to the CC operator: its small-graph limit-probe otherwise
-    # re-executes the (expensive) candidate+verify plan incrementally
-    # (measured 48s -> ~8s at sf0.1)
-    links = checkpoint_df(
-        pairs.select(
-            F.format_string(pad, a).alias("src"),
-            F.format_string(pad, b).alias("dst"),
-        )
+    # the CC operator checkpoints its link set before reading it, so
+    # the (expensive) candidate+verify plan runs once
+    links = pairs.select(
+        F.format_string(pad, a).alias("src"),
+        F.format_string(pad, b).alias("dst"),
     )
     # r8: canonical_map, not canonical_labels + rejoin — every link
     # endpoint IS an id of the labeled universe, so the lossless

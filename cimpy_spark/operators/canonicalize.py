@@ -1,4 +1,4 @@
-"""Stage 3 — canonicalization via iterative connected components.
+"""Stage 3 — canonicalization via connected components.
 
 The reference merges objects that arrive from different profile files
 under one UUID (cimpy/cimimport.py:215-231). Generalized to explicit
@@ -7,128 +7,82 @@ same-entity graph; the canonical id of a component is its minimum
 entity id (deterministic election, mirroring the reference's
 min-priority profile pick, cimpy/cimexport.py:196-214).
 
-Algorithm: min-label propagation with **pointer jumping** — each
-round takes (a) the min over neighbor labels and (b) the label of the
-label (path halving), a driver loop with ``localCheckpoint`` per
-iteration to cut lineage (SURVEY.md §4). Pointer jumping doubles the
-distance a minimum travels per round, so convergence is O(log
-diameter) instead of O(diameter) — the property that matters at
-10^12-turn scale where adversarial alias chains exist (same recipe
-as the Hash-to-Min family, Rastogi et al., "Finding Connected
-Components in Map-Reduce in Logarithmic Rounds"). Iterations are
-bounded and the fixpoint is asserted.
+Algorithm: local-then-global contraction (Kiveris et al., "Connected
+Components in MapReduce and Beyond", SoCC 2014). Each round
+hash-partitions the symmetric links on ``a`` into
+⌈rows / LINKS_PER_TASK⌉ partitions and runs a min-id union-find over
+each partition in one Arrow task, emitting (vertex, local root). One
+partition is the whole graph, so its roots are exact and the loop
+stops — at today's link volumes the first round is the last, with no
+driver collect. Otherwise each vertex takes the minimum of its local
+roots, the running map is composed through it, and the next round
+runs on the contracted links joining that minimum to the vertex's
+other local roots. Every contracted link joins two vertices of one
+component, and the component minimum is its own local root
+everywhere, so labels are component minima whatever the partitioning.
+Rounds are bounded and running out of them raises.
 """
 
 from __future__ import annotations
 
+from typing import Iterator
+
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from cimpy_spark.plans.checkpoints import checkpoint_df
 
-# Below this many (undirected, deduped) sameAs links, connected
-# components run as a driver-side union-find over ONE collect — the
-# distributed loop's ~0.5-1s/round fixed job latency dominates real
-# work at small scale (9 rounds ≈ 7s for 600 links). 1M links ≈ tens
-# of MB on the driver — safely collectable; above that, the O(log d)
-# pointer-jumping loop takes over.
-SMALL_LINKS_THRESHOLD = 1_000_000
+# Sym-link rows one union-find task holds: 1M string pairs are tens of
+# MB in a Python dict, and the link sets seen so far fit one task, so
+# the first round is exact.
+LINKS_PER_TASK = 1_000_000
+MAX_ROUNDS = 25
 
 
-def canonical_map(
-    entities: DataFrame,
-    same_links: DataFrame,
-    max_iter: int = 25,
-    small_threshold: int = SMALL_LINKS_THRESHOLD,
-) -> DataFrame:
+def canonical_map(entities: DataFrame, same_links: DataFrame) -> DataFrame:
     """(entity_id, canonical_id) for every declared entity.
 
     `entities`: one row per declared entity (column ``entity_id``).
     `same_links`: (src, dst) sameAs pairs (directed, raw).
 
-    Small link sets short-circuit to ONE broadcast join: the declared
+    ONE broadcast join against the endpoint map: the declared
     restriction drops undeclared-endpoint labels anyway, so the full
     lossless labeling is never materialized on this path.
     """
-    edges_plan = _sym_links(same_links)
-    pairs = _collect_if_small(edges_plan, small_threshold)
-    if pairs is not None:
-        ep_map = _union_find_df(entities.sparkSession, pairs)
-        return _declared_labels(entities, ep_map)
-    labels = _distributed_labels(entities, edges_plan, max_iter)
-    return entities.join(labels, "entity_id").select("entity_id", "canonical_id")
+    ep_map, n_links = _components(_sym_links(same_links))
+    return _declared_labels(entities, ep_map, n_links)
 
 
-def canonical_labels(
-    entities: DataFrame,
-    same_links: DataFrame,
-    max_iter: int = 25,
-    small_threshold: int = SMALL_LINKS_THRESHOLD,
-) -> DataFrame:
+def canonical_labels(entities: DataFrame, same_links: DataFrame) -> DataFrame:
     """(entity_id, canonical_id) for EVERY vertex — declared entities
     and raw alias endpoints alike. This is the lossless contraction
     committed as the `cmap_full` stage; `canonical_map` is its
     restriction to declared entities."""
-    # Undirected, deduped link set; restrict to declared entities is
-    # not required (labels for undeclared alias endpoints are simply
-    # dropped at the end by the final join).
-    edges_plan = _sym_links(same_links)
-
-    # ONE limit-probe job decides the path AND, when small, already
-    # delivers the complete edge set (limit N+1 returns everything if
-    # fewer rows exist) — no separate checkpoint/count/collect jobs
-    pairs = _collect_if_small(edges_plan, small_threshold)
-    if pairs is not None:
-        return _small_graph_labels(entities, pairs)
-    return _distributed_labels(entities, edges_plan, max_iter)
-
-
-def _distributed_labels(
-    entities: DataFrame, edges_plan: DataFrame, max_iter: int
-) -> DataFrame:
-    """Pointer-jumping min-label loop over a (large) link set — the
-    full lossless labeling (every vertex, declared or not)."""
-    spark = entities.sparkSession
-    edges = checkpoint_df(edges_plan, eager=True)
-    # the count sizes the loop's working set (the link set is usually
-    # tiny relative to the corpus; a fixed shuffle width would pay
-    # hundreds of near-empty tasks per round)
-    n_edges = edges.count()
-    shuffle_parts = int(spark.conf.get("spark.sql.shuffle.partitions", "32"))
-    n_parts = max(1, min(shuffle_parts, n_edges // 50_000 + 1))
-    edges = edges.repartition(n_parts, "a")
-
-    vertices = (
-        entities.select(F.col("entity_id").alias("a"))
-        .union(edges.select("a"))
-        .distinct()
+    ep_map, n_links = _components(_sym_links(same_links))
+    # read three times below: the declared join, the semi and the anti
+    ep_map = checkpoint_df(ep_map)
+    declared = _declared_labels(entities, ep_map, n_links)
+    # endpoint vertices that are ALSO declared already carry a label
+    # above; subtract them without shuffling the big entities side
+    # (broadcast semi to find the overlap, broadcast anti to remove it
+    # — an anti join against `entities` directly would shuffle the
+    # full dictionary)
+    matched = entities.select("entity_id").join(
+        _maybe_broadcast(ep_map.select("entity_id"), n_links), "entity_id", "left_semi"
     )
-    labels = checkpoint_df(
-        vertices.select("a", F.col("a").alias("comp")).repartition(n_parts, "a"),
-        eager=True,
+    endpoint_only = ep_map.join(
+        _maybe_broadcast(matched, n_links), "entity_id", "left_anti"
     )
-
-    # per-plan repartitions above pin the working-set width for the
-    # loop inputs; intermediate shuffles inside the loop are coalesced
-    # at runtime by AQE (coalescePartitions) — no session-global
-    # shuffle.partitions mutation (it leaked into concurrent queries
-    # and raced between concurrent loops).
-    labels = _iterate(edges, labels, max_iter)
-
-    return labels.select(
-        F.col("a").alias("entity_id"), F.col("comp").alias("canonical_id")
-    )
+    return declared.unionByName(endpoint_only)
 
 
-def _declared_labels(entities: DataFrame, ep_map: DataFrame | None) -> DataFrame:
-    """Labels for the DECLARED entities given the (small, broadcast)
-    endpoint map: entities outside the alias graph label themselves."""
-    if ep_map is None:
-        return entities.select(
-            "entity_id", F.col("entity_id").alias("canonical_id")
-        )
+def _declared_labels(entities: DataFrame, ep_map: DataFrame, n_links: int) -> DataFrame:
+    """Labels for the DECLARED entities given the endpoint map (at most
+    `n_links` rows): entities outside the alias graph label
+    themselves."""
     return entities.select("entity_id").join(
-        F.broadcast(ep_map), "entity_id", "left"
+        _maybe_broadcast(ep_map, n_links), "entity_id", "left"
     ).select(
         "entity_id",
         F.coalesce("canonical_id", "entity_id").alias("canonical_id"),
@@ -153,20 +107,58 @@ def _sym_links(same_links: DataFrame) -> DataFrame:
     return fwd.select(both.alias("e")).select("e.a", "e.b").distinct()
 
 
-def _collect_if_small(edges_plan: DataFrame, threshold: int):
-    """Collect the edge set iff it is within the threshold — a single
-    limit-probe job: limit(threshold+1) returns the COMPLETE set when
-    fewer rows exist, else a sentinel row proving the set is large
-    (never collects more than threshold+1 rows)."""
-    rows = edges_plan.limit(threshold + 1).collect()
-    return rows if len(rows) <= threshold else None
+def _components(links: DataFrame) -> tuple[DataFrame, int]:
+    """(entity_id, canonical_id) for every vertex of the symmetric link
+    set `links` (a, b), and the first round's link count — a bound on
+    the map's rows, since every vertex is the `a` of some link."""
+    labels, n_links = None, None
+    for _ in range(MAX_ROUNDS):
+        # lazy checkpoint: the count materializes it (one job, not two)
+        links = checkpoint_df(links, eager=False)
+        n = links.count()
+        n_links = n if n_links is None else n_links
+        n_parts = max(1, -(-n // LINKS_PER_TASK))
+        roots = links.repartition(n_parts, "a").mapInArrow(
+            _local_roots, "entity_id string, canonical_id string"
+        )
+        if n_parts == 1:
+            return _compose(labels, roots), n_links
+        # read twice: the round's map and the contracted links
+        local = checkpoint_df(
+            roots.groupBy("entity_id").agg(
+                F.min("canonical_id").alias("low"),
+                F.collect_set("canonical_id").alias("roots"),
+            )
+        )
+        labels = checkpoint_df(
+            _compose(
+                labels, local.select("entity_id", F.col("low").alias("canonical_id"))
+            )
+        )
+        links = _sym_links(
+            local.select(F.col("low").alias("src"), F.explode("roots").alias("dst"))
+            .filter(F.col("src") != F.col("dst"))
+        )
+    raise RuntimeError(f"canonical_map did not converge in {MAX_ROUNDS} rounds")
 
 
-def _union_find_df(spark, pairs) -> DataFrame | None:
-    """(entity_id, canonical_id) map for every alias-graph ENDPOINT —
-    driver union-find with path compression; min-id root election,
-    byte-identical to the distributed loop. Returns None for an empty
-    link set."""
+def _compose(labels: DataFrame | None, step: DataFrame) -> DataFrame:
+    """Map every vertex of `labels` through `step`; a label that `step`
+    does not cover is already final. None stands for the identity."""
+    if labels is None:
+        return step
+    nxt = step.select(
+        F.col("entity_id").alias("canonical_id"), F.col("canonical_id").alias("next")
+    )
+    return labels.join(nxt, "canonical_id", "left").select(
+        "entity_id", F.coalesce("next", "canonical_id").alias("canonical_id")
+    )
+
+
+def _local_roots(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    """Union-find with path compression over one partition's links,
+    min-id root election: (vertex, local root) for every vertex the
+    partition touches."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -178,90 +170,20 @@ def _union_find_df(spark, pairs) -> DataFrame | None:
             parent[x], x = root, parent[x]
         return root
 
-    for row in pairs:
-        ra, rb = find(row["a"]), find(row["b"])
-        if ra != rb:
-            lo, hi = (ra, rb) if ra < rb else (rb, ra)
-            parent[hi] = lo  # min-id election, as in the loop
-
-    if not parent:
-        return None
-    # NB (r8, measured): do NOT coalesce(1) this local-collection
-    # DataFrame — collapsing the default slices into one task made a
-    # downstream broadcast build ~9× slower (0.8 s → 7 s repeatably);
-    # the near-empty extra tasks are cheaper than whatever the
-    # single-task parent-partition computation pays.
-    return spark.createDataFrame(
-        [(v, find(v)) for v in parent], "entity_id string, canonical_id string"
-    )
-
-
-def _small_graph_labels(entities: DataFrame, pairs) -> DataFrame:
-    """Full lossless labeling from a collected (small) link set.
-
-    Only the EDGES were collected — the (possibly huge) entity
-    dictionary is never moved: entities outside the alias graph label
-    themselves via a broadcast left join against the endpoint map."""
-    spark = entities.sparkSession
-    ep_map = _union_find_df(spark, pairs)
-    declared = _declared_labels(entities, ep_map)
-    if ep_map is None:
-        return declared
-    # endpoint vertices that are ALSO declared already carry a label
-    # above; subtract them without shuffling the big entities side
-    # (broadcast semi to find the overlap, broadcast anti to remove it
-    # — an anti join against `entities` directly would shuffle the
-    # full dictionary)
-    matched = entities.select("entity_id").join(
-        F.broadcast(ep_map.select("entity_id")), "entity_id", "left_semi"
-    )
-    endpoint_only = ep_map.join(F.broadcast(matched), "entity_id", "left_anti")
-    return declared.unionByName(endpoint_only)
-
-
-def _iterate(edges: DataFrame, labels: DataFrame, max_iter: int) -> DataFrame:
-    for _ in range(max_iter):
-        # (a) candidate label = min(own, min over neighbors)
-        neighbor = edges.join(labels, "a").select(
-            F.col("b").alias("a"), F.col("comp")
+    for batch in batches:
+        for a, b in zip(batch.column("a").to_pylist(), batch.column("b").to_pylist()):
+            ra, rb = find(a), find(b)
+            if ra != rb:
+                lo, hi = (ra, rb) if ra < rb else (rb, ra)
+                parent[hi] = lo
+    if parent:
+        yield pa.RecordBatch.from_arrays(
+            [
+                pa.array(list(parent), pa.string()),
+                pa.array([find(v) for v in parent], pa.string()),
+            ],
+            names=["entity_id", "canonical_id"],
         )
-        relaxed = (
-            labels.select("a", "comp")
-            .union(neighbor)
-            .groupBy("a")
-            .agg(F.min("comp").alias("comp"))
-        )
-        # (b) pointer jumping ×2: comp ← label(label(comp)). Labels are
-        # always vertex ids, so the self-joins hit; left join +
-        # coalesce guards the (impossible) miss. Two jumps per round
-        # quadruple the distance a minimum travels, trading one cheap
-        # join for a whole extra round (round fixed costs dominate).
-        lut = relaxed.select(
-            F.col("a").alias("comp"), F.col("comp").alias("comp2")
-        )
-        jumped = relaxed
-        for _j in range(2):
-            jumped = (
-                jumped.join(lut, "comp", "left")
-                .select(
-                    F.col("a"),
-                    F.coalesce(F.col("comp2"), F.col("comp")).alias("comp"),
-                )
-            )
-        # lazy checkpoint: the changed-count action below materializes
-        # it, so each iteration costs ONE job instead of two
-        new_labels = checkpoint_df(jumped, eager=False)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "a")
-            .filter(F.col("n.comp") != F.col("o.comp"))
-            .limit(1)
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(f"canonical_map did not converge in {max_iter} iterations")
 
 
 BROADCAST_MAP_THRESHOLD = 5_000_000

@@ -310,7 +310,8 @@ def roundtrip_check(spark: SparkSession, out_dir: str) -> bool:
     committed = spark.read.parquet(ledger.stage_dir("canon_edges")).select(
         "src", "pred", "dst"
     )
-    rederived = canonical_edges(edges, cmap).select("src", "pred", "dst")
+    cmap_rows = ledger.records()["cmap_full"]["rows_out"]
+    rederived = canonical_edges(edges, cmap, cmap_rows).select("src", "pred", "dst")
     return (
         rederived.exceptAll(committed).isEmpty()
         and committed.exceptAll(rederived).isEmpty()

@@ -22,7 +22,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from cimpy_spark.operators.canonicalize import _maybe_broadcast, canonical_map
+from cimpy_spark.operators.canonicalize import canonical_edges, canonical_map
 
 
 def select_entities(nodes: DataFrame, attr: str, value) -> DataFrame:
@@ -90,28 +90,14 @@ def contract_edge_set(
         .distinct()
     )
     cmap = canonical_map(endpoints, to_contract.select("src", "dst"))
-    # same broadcast guard as canonicalize: the endpoint map covers the
-    # whole edge set and stops being a dimension at scale
-    src_map = _maybe_broadcast(
-        cmap.select(F.col("entity_id").alias("src"), F.col("canonical_id").alias("csrc")),
-        cmap_rows,
-    )
-    dst_map = _maybe_broadcast(
-        cmap.select(F.col("entity_id").alias("dst"), F.col("canonical_id").alias("cdst")),
-        cmap_rows,
-    )
     if remaining is None:
         remaining = edges.join(
             to_contract.select("src", "pred", "dst"),
             ["src", "pred", "dst"],
             "left_anti",
         )
-    return (
-        remaining.join(src_map, "src")
-        .join(dst_map, "dst")
-        .select(F.col("csrc").alias("src"), "pred", F.col("cdst").alias("dst"))
-        .filter(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "pred", "dst"])
+    return canonical_edges(remaining, cmap, cmap_rows).filter(
+        F.col("src") != F.col("dst")
     )
 
 

@@ -1780,13 +1780,13 @@ def er_clusters(
     signal).
 
     Scale shape: reuses `canonicalize.canonical_labels` — the SAME
-    machinery that contracts explicit sameAs links (driver union-find
-    under the small-links threshold, checkpointed pointer-jumping
-    min-label loop above it), so the 100 TB story is already proven
-    there; match pairs are orders of magnitude sparser than sameAs
-    links. The DuckDB oracle recomputes components INDEPENDENTLY via
-    a recursive-CTE reachability closure over brute-force all-pairs
-    matches."""
+    machinery that contracts explicit sameAs links (a min-id
+    union-find over each hash partition of the links in one Arrow
+    task, contraction rounds until one partition holds the graph);
+    match pairs are orders of magnitude sparser than sameAs links, so
+    they take one task. The DuckDB oracle recomputes components
+    INDEPENDENTLY via a recursive-CTE reachability closure over
+    brute-force all-pairs matches."""
     from cimpy_spark.operators.canonicalize import canonical_labels
 
     pairs = entity_match(triples, cmap, canon_edges, num, den).select(

@@ -8,6 +8,7 @@ import json
 import os
 
 from cimpy_spark.fixtures.events_transcripts import transcripts_from_events
+from cimpy_spark.operators.canonicalize import canonical_edges
 from cimpy_spark.operators.materialize import STAGES, roundtrip_check, run_pipeline
 from cimpy_spark.plans.lineage import LineageLedger
 from tests.conftest import SF_TINY
@@ -65,11 +66,24 @@ def test_rerun_is_noop_and_lineage_counts(spark, tmp_path):
     assert recs["triples"]["rows_out"] >= recs["edges"]["rows_out"]
 
 
-def test_roundtrip_fixpoint(spark, tmp_path):
+def test_roundtrip_fixpoint(spark, tmp_path, monkeypatch):
+    from cimpy_spark.operators import materialize
+
     out_dir = str(tmp_path / "kg")
     t = transcripts_from_events(spark, SF_TINY)
     run_pipeline(spark, t, out_dir)
+    # the re-derivation sizes its map joins from the committed
+    # `cmap_full` row count, as the pipeline's own rewrite does
+    passed = []
+
+    def recording(edges, cmap, cmap_rows=0):
+        passed.append(cmap_rows)
+        return canonical_edges(edges, cmap, cmap_rows)
+
+    monkeypatch.setattr(materialize, "canonical_edges", recording)
     assert roundtrip_check(spark, out_dir)
+    assert passed == [LineageLedger(out_dir).records()["cmap_full"]["rows_out"]]
+    assert passed[0] > 0
 
 
 def test_bucketed_graph_join_is_exchange_free(spark, tmp_path):
