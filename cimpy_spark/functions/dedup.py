@@ -841,10 +841,8 @@ def _lsh_ingest(
     # staleness BEFORE this batch's append: a crash between a previous
     # arrivals commit and its pairs rewrite leaves a pair snapshot
     # that never saw those keys — recover with a full re-pair
-    pairs_usable = (
-        booted
-        and ledger.is_committed(pairs_stage)
-        and ledger.committed_after(pairs_stage, arrivals_stage)
+    pairs_usable = booted and ledger.is_committed(
+        pairs_stage, after=(arrivals_stage,)
     )
     if booted:
         seen_ids = ledger.read_append_stage(
@@ -879,7 +877,7 @@ def _lsh_ingest(
         # path, never an oversized broadcast) — free metadata, no
         # extra job.
         batch_keys = ledger.last_increment_rows(arrivals_stage)
-        # materialize EAGERLY: the pairs force-write below overwrites
+        # materialize EAGERLY: the pairs rewrite below overwrites
         # the very snapshot this reads (same hazard as the KG side's
         # cmap_full, materialize.py)
         old_pairs = checkpoint_df(
@@ -905,7 +903,8 @@ def _lsh_ingest(
     ).select(*key_cols, F.col("doc_a").alias(a), F.col("doc_b").alias(b))
 
     pairs_prov = ledger.run_stage(
-        spark, pairs_stage, lambda: carried.unionByName(recomputed), force=True
+        spark, pairs_stage, lambda: carried.unionByName(recomputed),
+        after=(arrivals_stage,),
     )
     cand = pairs_prov.select(a, b).distinct()
 

@@ -7,11 +7,17 @@ write: `nodes` partitioned by attribute class, `edges` partitioned by
 predicate (the profile-routing analog — consumers of one predicate /
 attribute family get partition pruning for free). The reference's
 refuse-to-overwrite rule (cimpy/cimexport.py:322-334) maps to the
-committed-snapshot check: a committed stage is never rewritten unless
-forced.
+committed-snapshot check: a committed stage is never rewritten while
+it is newer than the stages it was built from.
 
-Each stage is checkpointed through `LineageLedger.run_stage`, so a
-killed run resumes from the last committed stage (north_rule).
+Each stage is checkpointed through `LineageLedger.run_stage`, which
+reuses a snapshot only if it was committed after every stage its build
+reads (`after`): meta and entities read triples; linked triples and
+entities; edges and quarantine linked; cmap_full triples and entities;
+cmap entities and cmap_full; canon_edges edges and cmap; nodes triples
+and cmap. A recomputed stage (or a triples append) is newer than every
+stage reading it, so a killed run or ingest resumes from the last
+stage still current (north_rule). To rebuild, remove the output dir.
 """
 
 from __future__ import annotations
@@ -54,55 +60,46 @@ def run_pipeline(
     spark: SparkSession,
     transcripts: DataFrame,
     out_dir: str,
-    force: bool = False,
 ) -> dict[str, DataFrame]:
     """Run (or resume) the full pipeline, committing each stage.
 
     Returns the committed snapshot DataFrames keyed by stage name.
-    Re-invoking on a completed out_dir recomputes nothing.
+    The committed triples are reused (new conversations are
+    `ingest_increment`'s job); every other stage is reused only if
+    committed after the stages it reads, so a completed out_dir
+    recomputes nothing and an interrupted ingest is finished.
     """
     ledger = LineageLedger(out_dir)
-    out: dict[str, DataFrame] = {}
-
     # fact stage is APPEND-ONLY (Iceberg-append stand-in): the
     # bootstrap writes increment 0; later ingest_increment calls add
     # increment dirs without ever rewriting old ones
-    if not force and ledger.is_append_committed("triples"):
-        out["triples"] = ledger.read_append_stage(spark, "triples", TRIPLE_SCHEMA)
+    if ledger.is_append_committed("triples"):
+        triples = ledger.read_append_stage(spark, "triples", TRIPLE_SCHEMA)
     else:
-        out["triples"] = ledger.run_append_stage(
+        triples = ledger.run_append_stage(
             spark, "triples", lambda: extract_triples(transcripts),
             partition_by=["obj_kind"], reset=True,
         )
-    triples = out["triples"]
-
-    # per-profile snapshot header (model-description analog,
-    # cimpy/cimexport.py:378-389) incl. the first-wins author/namespace
-    # capture; commit wall time lives in the ledger
-    out["meta"] = ledger.run_stage(
-        spark,
-        "meta",
-        lambda: snapshot_meta(triples, snapshot_header(transcripts)),
-        force=force,
-    )
-    out.update(_derived_stages(spark, ledger, triples, force))
-    return out
+    # per-profile first-wins author/namespace capture (model-description
+    # analog, cimpy/cimexport.py:378-389)
+    return _commit_graph(spark, ledger, triples, snapshot_header(transcripts))
 
 
-def _derived_stages(
-    spark: SparkSession, ledger: LineageLedger, triples: DataFrame, force: bool
+def _commit_graph(
+    spark: SparkSession, ledger: LineageLedger, triples: DataFrame, header: DataFrame
 ) -> dict[str, DataFrame]:
-    """Every stage derived from the committed triple snapshot, in
-    commit order: entities → linked → edges → quarantine → cmap_full
-    → cmap → canon_edges → nodes. Shared by `run_pipeline` (resumable)
-    and `ingest_increment` (forced after each append), so both reach
-    the same committed layout through one code path."""
-    out: dict[str, DataFrame] = {}
-
+    """Commit `meta` (joining in `header`) and every stage derived
+    from the committed triples. Shared by `run_pipeline` and
+    `ingest_increment`, so both reach the same committed layout."""
+    out: dict[str, DataFrame] = {"triples": triples}
+    # commit wall time lives in the ledger, not in meta
+    out["meta"] = ledger.run_stage(
+        spark, "meta", lambda: snapshot_meta(triples, header), after=("triples",)
+    )
     # committed KEYED (entity_id, type, conv_id, turn_idx, mention_idx):
     # the winning election key is part of the stage's committed layout
     out["entities"] = ledger.run_stage(
-        spark, "entities", lambda: declared_entities_keyed(triples), force=force
+        spark, "entities", lambda: declared_entities_keyed(triples), after=("triples",)
     )
     entities = out["entities"]
 
@@ -115,13 +112,14 @@ def _derived_stages(
         lambda: resolve_references(
             triples, entities, broadcast_dict=n_entities <= BROADCAST_MAP_THRESHOLD
         ),
-        force=force,
+        after=("triples", "entities"),
     )
     out["edges"] = ledger.run_stage(
-        spark, "edges", lambda: edges_from_resolved(out["linked"]), force=force
+        spark, "edges", lambda: edges_from_resolved(out["linked"]), after=("linked",)
     )
     out["quarantine"] = ledger.run_stage(
-        spark, "quarantine", lambda: quarantine_from_resolved(out["linked"]), force=force
+        spark, "quarantine", lambda: quarantine_from_resolved(out["linked"]),
+        after=("linked",),
     )
 
     # full labeling (declared entities AND undeclared alias endpoints);
@@ -133,7 +131,7 @@ def _derived_stages(
     out["cmap_full"] = ledger.run_stage(
         spark, "cmap_full",
         lambda: canonical_labels(entities, P.same_links(triples)),
-        force=force,
+        after=("triples", "entities"),
     )
     cmap_rows = ledger.records()["cmap_full"]["rows_out"]
     out["cmap"] = ledger.run_stage(
@@ -141,21 +139,23 @@ def _derived_stages(
         lambda: entities.join(out["cmap_full"], "entity_id").select(
             "entity_id", "canonical_id"
         ),
-        force=force,
+        after=("entities", "cmap_full"),
     )
     cmap = out["cmap"]
 
     out["canon_edges"] = ledger.run_stage(
         spark, "canon_edges",
         lambda: canonical_edges(out["edges"], cmap, cmap_rows),
-        partition_by=["pred"], force=force,
+        after=("edges", "cmap"),
+        partition_by=["pred"],
     )
     out["nodes"] = ledger.run_stage(
         spark, "nodes",
         lambda: canonical_nodes(triples, cmap, cmap_rows),
+        after=("triples", "cmap"),
         # provenance partition first (rdf:about routing analog), then
         # attribute family for consumer partition pruning
-        partition_by=["profile", "attr"], force=force,
+        partition_by=["profile", "attr"],
     )
     return out
 
@@ -176,11 +176,11 @@ def ingest_increment(
     partition-watermark check against the lineage ledger — same
     semantics, cheaper lookup). The snapshot header is the one
     increment-keyed merge: a micro-batch's transcripts lack the
-    history its first-wins election needs. Every other derived stage
-    is forced through `_derived_stages`, the same code `run_pipeline`
-    runs, so the committed snapshot equals a single full run by
-    construction. An output dir without an append-format triple
-    snapshot bootstraps through `run_pipeline`.
+    history its first-wins election needs. The append makes every
+    derived stage stale, so `_commit_graph`, the code `run_pipeline`
+    runs, recomputes them all: the committed snapshot equals a single
+    full run by construction. An output dir without an append-format
+    triple snapshot bootstraps through `run_pipeline`.
     """
     ledger = LineageLedger(out_dir)
     # gate on the APPEND format specifically: a legacy-format triples
@@ -191,12 +191,12 @@ def ingest_increment(
 
     committed = ledger.read_append_stage(spark, "triples", TRIPLE_SCHEMA)
     # committed first-wins header (read BEFORE the append below — the
-    # meta stage is force-overwritten every increment, and its commit
-    # must postdate the pre-append triples commit to be trusted;
+    # meta stage is rewritten every increment, and its commit must
+    # postdate the pre-append triples commit to be trusted;
     # materialized eagerly because the meta stage overwrites the very
     # snapshot this reads)
     old_hdr = None
-    if ledger.committed_after("meta", "triples"):
+    if ledger.is_committed("meta", after=("triples",)):
         _om = spark.read.parquet(ledger.stage_dir("meta"))
         if "author" in _om.columns:
             old_hdr = (
@@ -215,41 +215,32 @@ def ingest_increment(
     fresh = transcripts.join(seen, "conv_id", "left_anti")
 
     # APPEND the increment (old increment dirs are never rewritten —
-    # O(increment) IO, the Iceberg-append semantics), then force the
-    # derived stages
-    out: dict[str, DataFrame] = {}
-    out["triples"] = ledger.run_append_stage(
+    # O(increment) IO, the Iceberg-append semantics)
+    triples = ledger.run_append_stage(
         spark, "triples", lambda: extract_triples(fresh), partition_by=["obj_kind"]
     )
-    triples = out["triples"]
 
-    def _meta():
-        # keyed first-wins merge: the committed header (min key over
-        # all previous increments) ∪ the increment's header re-elects
-        # exactly — no rescan of old transcripts. A stale/legacy meta
-        # stage (crash between the triples and meta commits of a
-        # previous increment) falls back to capturing over the WHOLE
-        # transcripts argument — a superset of `fresh`, the most
-        # history reachable without the lost commit. NB: the fallback
-        # is exact only when the caller passes the full corpus (as the
-        # driver does); a caller passing just the increment gets a
-        # header that can differ from a full rebuild, hence the
-        # warning.
-        if old_hdr is not None:
-            hdr = merge_headers(old_hdr, snapshot_header(fresh))
-        else:
-            warnings.warn(
-                "stale/legacy meta stage: recovering the snapshot header "
-                "from the passed transcripts only — pass the widest "
-                "transcript set available for an exact header",
-                stacklevel=2,
-            )
-            hdr = snapshot_header(transcripts)
-        return snapshot_meta(triples, hdr)
-
-    out["meta"] = ledger.run_stage(spark, "meta", _meta, force=True)
-    out.update(_derived_stages(spark, ledger, triples, force=True))
-    return out
+    # keyed first-wins merge: the committed header (min key over all
+    # previous increments) ∪ the increment's header re-elects exactly —
+    # no rescan of old transcripts. A stale/legacy meta stage (crash
+    # between the triples and meta commits of a previous increment)
+    # falls back to capturing over the WHOLE transcripts argument — a
+    # superset of `fresh`, the most history reachable without the lost
+    # commit. NB: the fallback is exact only when the caller passes the
+    # full corpus (as the driver does); a caller passing just the
+    # increment gets a header that can differ from a full rebuild,
+    # hence the warning.
+    if old_hdr is not None:
+        header = merge_headers(old_hdr, snapshot_header(fresh))
+    else:
+        warnings.warn(
+            "stale/legacy meta stage: recovering the snapshot header "
+            "from the passed transcripts only — pass the widest "
+            "transcript set available for an exact header",
+            stacklevel=2,
+        )
+        header = snapshot_header(transcripts)
+    return _commit_graph(spark, ledger, triples, header)
 
 
 def write_bucketed_graph(

@@ -7,8 +7,11 @@ the end of an import (cimpy/cimimport.py:41-66,71-74). Here each
 pipeline stage commits (a) its output as a parquet snapshot directory
 and (b) a lineage record `(stage, rows_out, partitions, committed)`.
 A stage is *committed* iff its `_SUCCESS` marker and its ledger row
-both exist; resume reads the committed snapshot instead of
-recomputing — re-running a finished pipeline is a no-op.
+both exist. `run_stage` reuses a committed snapshot only when its
+commit is later than the last commit of every stage its build reads;
+otherwise it recomputes — re-running a finished pipeline is a no-op,
+and a resume after a crash between two commits rebuilds exactly the
+stages whose inputs changed.
 
 On a real cluster the snapshot store is Iceberg (atomic snapshot
 commit replaces the `_SUCCESS` convention and gives time travel);
@@ -41,36 +44,30 @@ class LineageLedger:
                         recs[r["stage"]] = r
         return recs
 
-    def committed_after(self, stage: str, other: str) -> bool:
-        """True iff `stage` is committed and its commit is at least as
-        recent as `other`'s — the staleness check for incremental
-        consumers (a crash between two stage commits must not let a
-        stale upstream snapshot be trusted)."""
-        recs = self.records()
-        if stage not in recs or not self.is_committed(stage):
-            return False
-        if other not in recs:
-            return True
-        return recs[stage]["seq"] > recs[other]["seq"]
-
     def stage_dir(self, stage: str) -> str:
         return os.path.join(self.out_dir, stage)
 
-    def is_committed(self, stage: str) -> bool:
+    def is_committed(self, stage: str, after: tuple[str, ...] = ()) -> bool:
+        """True iff `stage` is committed and its commit is later than
+        the last commit of every stage in `after` (the stages it was
+        built from)."""
         recs = self.records()
-        if stage not in recs:
+        rec = recs.get(stage)
+        if rec is None:
             return False
-        if "increments" in recs[stage]:  # append-only stage
-            return self.is_append_committed(stage)
-        return os.path.exists(os.path.join(self.stage_dir(stage), "_SUCCESS"))
+        if "increments" in rec:  # append-only stage
+            ok = self.is_append_committed(stage)
+        else:
+            ok = os.path.exists(os.path.join(self.stage_dir(stage), "_SUCCESS"))
+        return ok and all(rec["seq"] > recs[s]["seq"] for s in after if s in recs)
 
     def commit(
         self,
         stage: str,
-        df_written: DataFrame,
         rows: int,
         parts: int,
         partition_rows: dict[str, int] | None = None,
+        increments: list[str] | None = None,
     ) -> None:
         rec = {
             "stage": stage,
@@ -79,22 +76,29 @@ class LineageLedger:
             "partition_rows": partition_rows or {},
             "committed": True,
         }
+        if increments is not None:
+            rec["increments"] = increments
         # append-only ledger; last record per stage wins on read
         with open(self.path, "a") as f:
             f.write(json.dumps(rec) + "\n")
 
-    # ---- append-only stages (Iceberg-append stand-in) ----------------
-    #
-    # A fact stage at 10^12-turn scale must never be rewritten per
-    # increment. Each append writes ONLY the increment to
-    # <stage>/inc_<n>/ and commits a ledger record listing all live
-    # increment dirs; the snapshot reader is the union of those dirs.
-    # On Iceberg this is a metadata-only append commit; here the
-    # `_SUCCESS`-per-increment + last-ledger-record-wins convention
-    # gives the same crash semantics: an increment exists iff its dir
-    # is complete AND a committed record lists it. A crash between the
-    # two leaves an orphan dir that the retry overwrites in place
-    # (same index), so resume is idempotent.
+    def _write_and_commit(
+        self, stage, df, path, partition_by, increments=None, prev=None
+    ) -> None:
+        """Write `df` to `path` (parquet writes `_SUCCESS` last), then
+        append the stage's ledger record. An append stage passes its
+        live `increments` and the `prev` record whose totals the new
+        increment adds to."""
+        writer = df.write.mode("overwrite")  # overwrites crash leftovers
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(path)
+        # per-partition lineage (north_rule): row counts per committed
+        # file, from the parquet footers (no re-scan job)
+        per_file = self._per_file_rows(path, self.stage_dir(stage))
+        rows = sum(per_file.values()) + (prev["rows_out"] if prev else 0)
+        parts = len(per_file) + (prev["partitions"] if prev else 0)
+        self.commit(stage, rows, parts, per_file, increments)
 
     def _per_file_rows(self, scan_dir: str, rel_base: str) -> dict[str, int]:
         """Per-file row counts for a just-written parquet dir, read
@@ -117,6 +121,19 @@ class LineageLedger:
                 p
             ).metadata.num_rows
         return out
+
+    # ---- append-only stages (Iceberg-append stand-in) ----------------
+    #
+    # A fact stage at 10^12-turn scale must never be rewritten per
+    # increment. Each append writes ONLY the increment to
+    # <stage>/inc_<n>/ and commits a ledger record listing all live
+    # increment dirs; the snapshot reader is the union of those dirs.
+    # On Iceberg this is a metadata-only append commit; here the
+    # `_SUCCESS`-per-increment + last-ledger-record-wins convention
+    # gives the same crash semantics: an increment exists iff its dir
+    # is complete AND a committed record lists it. A crash between the
+    # two leaves an orphan dir that the retry overwrites in place
+    # (same index), so resume is idempotent.
 
     def append_increments(self, stage: str) -> list[str]:
         """Committed increment dirs for an append stage (absolute)."""
@@ -175,42 +192,24 @@ class LineageLedger:
     ) -> DataFrame:
         """Append one increment to the stage and return the reader over
         ALL committed increments. `reset=True` starts the increment
-        list over (bootstrap/force). Old increment dirs are never
-        rewritten — O(increment) IO per call, not O(corpus)."""
-        d = self.stage_dir(stage)
+        list over (bootstrap). Old increment dirs are never rewritten —
+        O(increment) IO per call, not O(corpus)."""
         rec = self.records().get(stage)
         incs = (
             list(rec["increments"])
             if (rec and "increments" in rec and not reset)
             else []
         )
-        prev_rows = rec["rows_out"] if (rec and incs) else 0
-        prev_parts = rec["partitions"] if (rec and incs) else 0
-
         df = build_increment()
         inc_name = f"inc_{len(incs):05d}"
-        inc_dir = os.path.join(d, inc_name)
-        writer = df.write.mode("overwrite")  # overwrites crash leftovers
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(inc_dir)
-        per_file = self._per_file_rows(inc_dir, d)
-        inc_rows = sum(per_file.values())
-        incs.append(inc_name)
-        with open(self.path, "a") as f:
-            f.write(
-                json.dumps(
-                    {
-                        "stage": stage,
-                        "rows_out": prev_rows + inc_rows,
-                        "partitions": prev_parts + len(per_file),
-                        "partition_rows": per_file,
-                        "increments": incs,
-                        "committed": True,
-                    }
-                )
-                + "\n"
-            )
+        self._write_and_commit(
+            stage,
+            df,
+            os.path.join(self.stage_dir(stage), inc_name),
+            partition_by,
+            increments=incs + [inc_name],
+            prev=rec if incs else None,
+        )
         return self.read_append_stage(spark, stage, df.schema)
 
     def run_stage(
@@ -218,32 +217,24 @@ class LineageLedger:
         spark: SparkSession,
         stage: str,
         build: "callable[[], DataFrame]",
+        after: tuple[str, ...],
         partition_by: list[str] | None = None,
-        force: bool = False,
     ) -> DataFrame:
-        """Compute-or-resume one stage.
+        """Compute-or-resume one stage whose `build` reads the stages
+        in `after`.
 
-        If the stage is committed and not forced, return the snapshot
-        reader (no recompute — idempotent resume). Otherwise compute,
-        write atomically-enough (parquet `_SUCCESS` last), record
-        lineage, and return the snapshot reader so downstream stages
-        consume the *committed* data, never a divergent in-memory
-        plan.
+        If the stage was committed after all of them, return the
+        snapshot reader (no recompute — idempotent resume). Otherwise
+        compute, write, record lineage, and return the snapshot reader
+        so downstream stages consume the *committed* data, never a
+        divergent in-memory plan. The new commit is later than every
+        stage reading this one, so staleness propagates downstream.
         """
         d = self.stage_dir(stage)
-        if not force and self.is_committed(stage):
+        if self.is_committed(stage, after):
             return spark.read.parquet(d)
         df = build()
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(d)
+        self._write_and_commit(stage, df, d, partition_by)
         # explicit schema: an empty stage writes no data files and
         # schema inference would fail on read-back
-        out = spark.read.schema(df.schema).parquet(d)
-        # per-partition lineage (north_rule): row counts per committed
-        # file/partition, from the parquet footers (no re-scan job)
-        per_file = self._per_file_rows(d, d)
-        rows = sum(per_file.values())
-        self.commit(stage, out, rows, len(per_file), per_file)
-        return out
+        return spark.read.schema(df.schema).parquet(d)

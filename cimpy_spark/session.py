@@ -23,9 +23,9 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    if cores is None:
-        cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    cores = int(cores)
+    cores = int(cores or len(os.sched_getaffinity(0)))  # CPUs we may run on
+    # half of physical memory (MemTotal on Linux), in MiB
+    half_mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE") // 2**21
     if shuffle_partitions is None:
         shuffle_partitions = max(cores, 8)
     builder = (
@@ -42,14 +42,10 @@ def get_spark(
         # cores the memory bus is the binding constraint and 10k wins
         # outright (1.28M vs 1.22M turns/s at 16 cores) AND scales
         # better (4→16 efficiency 0.897 vs 0.713 — smaller bursts,
-        # better cache locality). Default to the at-scale winner;
-        # override per-run via SPARK_GRAFT_ARROW_BATCH.
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_GRAFT_ARROW_BATCH", "10000"),
-        )
+        # better cache locality). The at-scale winner is the constant.
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.sql.session.timeZone", "UTC")
-        # 24g default (was 8g), measured r8: in local[N] mode ONE JVM
+        # 24g ceiling (was 8g), measured r8: in local[N] mode ONE JVM
         # holds every executor, all in-memory caches AND any
         # memory-sink tables. Above the r7 bench scale the streaming
         # memory-sink table count (collected rows re-parallelized
@@ -61,10 +57,15 @@ def get_spark(
         # (18.5M rows); 48g clears 8x BUT costs ~1.5-2x on the cold
         # allocation-heavy md5-fold stage in full-bench context
         # (interleaved A/B: v1 20.8/10.1s at 48g vs 12.8/6.6s at 24g)
-        # — so 24g is the default and larger escalations opt in via
-        # SPARK_GRAFT_DRIVER_MEM. On a real cluster the driver size
-        # is a deployment setting and executors hold the data.
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # — so 24g is the ceiling and larger escalations opt in via
+        # SPARK_GRAFT_DRIVER_MEM. Half of memory keeps the JVM (resident
+        # size grows past the heap) from the OS OOM killer on small
+        # hosts. On a real cluster the driver size is a deployment
+        # setting and executors hold the data.
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or f"{min(24 * 1024, half_mem)}m",
+        )
         .config("spark.ui.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -113,8 +113,8 @@ def stream_ingest(spark, input_dir: str, out_dir: str):
     """Streaming KG maintenance end-to-end: each micro-batch of
     transcript files flows through the SAME batch-incremental ingest
     (extract only unseen conversations, append-only triples, keyed
-    header merge, then `run_pipeline`'s derived stages forced over the
-    whole snapshot) via ``foreachBatch`` — the Spark pattern for
+    header merge, then `run_pipeline`'s derived stages recomputed over
+    the whole snapshot) via ``foreachBatch`` — the Spark pattern for
     transactional/stateful sinks that Structured Streaming can't
     express declaratively.
 

@@ -14,7 +14,7 @@ Locally (sandbox) it also runs standalone:
 `--input` is either a directory containing `events.parquet` (the
 transcripts are derived deterministically) or a parquet directory of
 transcripts with the input_hint schema (pass --transcripts). Re-runs
-resume from the last committed stage; --force recomputes everything.
+resume from the last committed stage; to rebuild, remove the --out dir.
 """
 
 from __future__ import annotations
@@ -30,7 +30,6 @@ def main() -> int:
     ap.add_argument("--out", required=True)
     ap.add_argument("--transcripts", action="store_true",
                     help="input is a transcripts parquet dir, not an sf dir")
-    ap.add_argument("--force", action="store_true")
     ap.add_argument("--increment", action="store_true",
                     help="batch-incremental: extract only unseen conversations")
     ap.add_argument("--cores", default=None)
@@ -63,7 +62,7 @@ def main() -> int:
     if args.increment:
         ingest_increment(spark, transcripts, args.out)
     else:
-        run_pipeline(spark, transcripts, args.out, force=args.force)
+        run_pipeline(spark, transcripts, args.out)
     ok = roundtrip_check(spark, args.out)
     ledger = LineageLedger(args.out)
     print(

@@ -15,7 +15,7 @@ column (`count()` would prune the columns and time a bare scan), and
 prints one JSON line per entry. Two modes:
 
 - Without `--base`, each named entry runs once, in process, at the
-  session's cores (SPARK_GRAFT_CPUS).
+  session's default cores (the CPUs the process may run on).
 - With `--base N`, each entry runs at N and at 4N cores, each level in
   a fresh JVM `taskset`-pinned to exactly that many CPUs (so the small
   level cannot borrow idle cores for GC and Arrow work), over the same

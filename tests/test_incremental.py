@@ -83,6 +83,68 @@ def test_crash_between_triples_and_cmap_commits(spark, tmp_path):
         assert full[stage].exceptAll(res[stage]).count() == 0, stage
 
 
+@pytest.mark.parametrize("lost", ["meta", "entities"])
+def test_resume_after_interrupted_ingest_equals_full_build(
+    spark, tmp_path, monkeypatch, lost
+):
+    """An ingest that crashes after its triples append, before its
+    `lost` commit, leaves derived stages built from the smaller
+    snapshot. The documented resume, `run_pipeline` over the same
+    input, must rebuild every stage that predates the append, not
+    reuse it because its `_SUCCESS` marker is still there."""
+    from cimpy_spark.plans.lineage import LineageLedger
+
+    t = transcripts_from_events(spark, SF_TINY).cache()
+    convs = sorted(r["conv_id"] for r in t.select("conv_id").distinct().collect())
+    half = set(convs[: len(convs) // 2])
+    d = str(tmp_path / "kg")
+    run_pipeline(spark, t.filter(F.col("conv_id").isin(list(half))), d)
+
+    real = LineageLedger.run_stage
+
+    def crash(ledger, spark_, stage, *args, **kwargs):
+        if stage == lost:
+            raise RuntimeError(f"injected crash before {stage} commit")
+        return real(ledger, spark_, stage, *args, **kwargs)
+
+    monkeypatch.setattr(LineageLedger, "run_stage", crash)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        ingest_increment(spark, t, d)
+    monkeypatch.setattr(LineageLedger, "run_stage", real)
+
+    res = run_pipeline(spark, t, d)
+    full = run_pipeline(spark, t, str(tmp_path / "full"))
+    for stage in ["meta", "entities", "cmap", "canon_edges", "nodes"]:
+        a = sorted(tuple(r) for r in res[stage].collect())
+        b = sorted(tuple(r) for r in full[stage].select(*res[stage].columns).collect())
+        assert a == b, stage
+
+
+def test_resume_recommits_only_the_stage_lost(spark, tmp_path):
+    """Losing only `quarantine`'s `_SUCCESS` makes the resume recommit
+    `quarantine` alone: the stages after it in STAGES do not read it,
+    so reuse follows what each build reads, not the stage order."""
+    import json
+    import os
+
+    from cimpy_spark.plans.lineage import LineageLedger
+
+    t = transcripts_from_events(spark, SF_TINY)
+    d = str(tmp_path / "kg")
+    run_pipeline(spark, t, d)
+    ledger = LineageLedger(d)
+    rows = ledger.records()["quarantine"]["rows_out"]
+    with open(ledger.path) as f:
+        kept = len(f.readlines())
+    os.remove(os.path.join(ledger.stage_dir("quarantine"), "_SUCCESS"))
+
+    run_pipeline(spark, t, d)
+    with open(ledger.path) as f:
+        recommitted = [json.loads(line)["stage"] for line in f.readlines()[kept:]]
+    assert recommitted == ["quarantine"]
+    assert ledger.records()["quarantine"]["rows_out"] == rows
+
+
 def _decl(e: str, t: str) -> str:
     return f"«decl {e} type:{t} p_int=1 p_bool=true p_enum=kind:Unit.V1»"
 

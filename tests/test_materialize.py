@@ -135,7 +135,7 @@ def test_append_reader_guards_legacy_records(spark, tmp_path):
 
     ledger = LineageLedger(str(tmp_path / "legacy"))
     # legacy-style record: committed, no 'increments' list
-    ledger.commit("triples", None, rows=10, parts=1)
+    ledger.commit("triples", rows=10, parts=1)
     assert not ledger.is_append_committed("triples")
     with pytest.raises(ValueError):
         ledger.read_append_stage(spark, "triples", "a string")

@@ -28,7 +28,7 @@ def main() -> None:
     from cimpy_spark.session import get_spark
     from cimpy_spark.functions import similarity as SIM
 
-    spark = get_spark("ann-recall", cores=8, shuffle_partitions=16)
+    spark = get_spark("ann-recall", shuffle_partitions=16)
     spark.sparkContext.setLogLevel("ERROR")
     emb = spark.read.parquet(f"{SF_DIR}/embeddings.parquet").cache()
     n_vecs = emb.count()

@@ -105,7 +105,7 @@ if __name__ == "__main__":
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     names = sys.argv[2].split(",") if len(sys.argv) > 2 else None
-    spark = get_spark("compare", cores=8, shuffle_partitions=8)
+    spark = get_spark("compare", shuffle_partitions=8)
     good = compare(spark, sf_dir, names)
     spark.stop()
     sys.exit(0 if good else 1)

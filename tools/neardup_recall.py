@@ -32,7 +32,7 @@ def main() -> None:
     )
     from cimpy_spark.functions import similarity as SIM
 
-    spark = get_spark("neardup-recall", cores=8, shuffle_partitions=8)
+    spark = get_spark("neardup-recall", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     oe = organic_embeddings(
         spark.read.parquet(f"{SF_DIR}/embeddings.parquet")

@@ -35,12 +35,11 @@ UI_PORT = 4057
 
 
 def run_level(mem: str, root: str) -> dict:
-    os.environ["SPARK_GRAFT_DRIVER_MEM"] = mem
     spark = get_spark(
         f"spill-{mem}",
-        cores=8,
         shuffle_partitions=8,
         extra_conf={
+            "spark.driver.memory": mem,
             "spark.ui.enabled": "true",
             "spark.ui.port": str(UI_PORT),
             # shrink execution memory so the starved level exercises

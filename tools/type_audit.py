@@ -26,7 +26,7 @@ def main(sf_dir: str = "/root/testdata/sf0.001") -> int:
     import __spark_entry__ as m
     from cimpy_spark.session import get_spark
 
-    spark = get_spark("type-audit", cores=8, shuffle_partitions=8)
+    spark = get_spark("type-audit", shuffle_partitions=8)
     spark.sparkContext.setLogLevel("ERROR")
     con = duckdb_conn(sf_dir)
     bad = 0
