@@ -15,9 +15,15 @@ reuses a snapshot only if it was committed after every stage its build
 reads (`after`): meta and entities read triples; linked triples and
 entities; edges and quarantine linked; cmap_full triples and entities;
 cmap entities and cmap_full; canon_edges edges and cmap; nodes triples
-and cmap. A recomputed stage (or a triples append) is newer than every
-stage reading it, so a killed run or ingest resumes from the last
-stage still current (north_rule). To rebuild, remove the output dir.
+and cmap. Those `after` sets are the stage DAG: `_commit_graph` hands
+it to `LineageLedger.run_stages`, which starts each build as soon as
+the stages it reads are written (meta overlaps entities; linked,
+edges and quarantine overlap cmap_full and cmap; canon_edges overlaps
+nodes) and appends the ledger records in `STAGES` order. A recomputed stage (or a triples append) is newer
+than every stage reading it, so a killed run or ingest resumes from
+the last stage still current (north_rule), and a reused stage is read
+with the schema its record holds, without a Spark job. To rebuild,
+remove the output dir.
 """
 
 from __future__ import annotations
@@ -90,74 +96,71 @@ def _commit_graph(
 ) -> dict[str, DataFrame]:
     """Commit `meta` (joining in `header`) and every stage derived
     from the committed triples. Shared by `run_pipeline` and
-    `ingest_increment`, so both reach the same committed layout."""
-    out: dict[str, DataFrame] = {"triples": triples}
-    # commit wall time lives in the ledger, not in meta
-    out["meta"] = ledger.run_stage(
-        spark, "meta", lambda: snapshot_meta(triples, header), after=("triples",)
-    )
-    # committed KEYED (entity_id, type, conv_id, turn_idx, mention_idx):
-    # the winning election key is part of the stage's committed layout
-    out["entities"] = ledger.run_stage(
-        spark, "entities", lambda: declared_entities_keyed(triples), after=("triples",)
-    )
-    entities = out["entities"]
+    `ingest_increment`, so both reach the same committed layout.
 
-    # ONE linking join committed; edges/quarantine are cheap views
-    # over the committed snapshot (broadcast decision from the ledger,
-    # not a fresh count action)
-    n_entities = ledger.records()["entities"]["rows_out"]
-    out["linked"] = ledger.run_stage(
-        spark, "linked",
-        lambda: resolve_references(
-            triples, entities, broadcast_dict=n_entities <= BROADCAST_MAP_THRESHOLD
+    One row per stage: (stage, the stages its build reads, build,
+    partition columns). `LineageLedger.run_stages` starts each build
+    once the stages it reads are written, so `linked`'s branch and
+    the canonicalization chain overlap, and appends the records in
+    this order, which is `STAGES` order."""
+
+    def rows(stage: str) -> int:
+        # a written dependency's row count, from its commit (no count job)
+        return ledger.records()[stage]["rows_out"]
+
+    graph = [
+        # commit wall time lives in the ledger, not in meta
+        ("meta", ("triples",), lambda g: snapshot_meta(g["triples"], header), None),
+        # committed KEYED (entity_id, type, conv_id, turn_idx,
+        # mention_idx): the winning election key is part of the
+        # stage's committed layout
+        ("entities", ("triples",), lambda g: declared_entities_keyed(g["triples"]), None),
+        # ONE linking join committed; edges/quarantine are cheap views
+        # over the committed snapshot (broadcast decision from the
+        # ledger, not a fresh count action)
+        (
+            "linked", ("triples", "entities"),
+            lambda g: resolve_references(
+                g["triples"], g["entities"],
+                broadcast_dict=rows("entities") <= BROADCAST_MAP_THRESHOLD,
+            ),
+            None,
         ),
-        after=("triples", "entities"),
-    )
-    out["edges"] = ledger.run_stage(
-        spark, "edges", lambda: edges_from_resolved(out["linked"]), after=("linked",)
-    )
-    out["quarantine"] = ledger.run_stage(
-        spark, "quarantine", lambda: quarantine_from_resolved(out["linked"]),
-        after=("linked",),
-    )
-
-    # full labeling (declared entities AND undeclared alias endpoints);
-    # public cmap = its restriction to declared entities. No stage
-    # below reads the undeclared rows; it stays committed because its
-    # ledger record is part of the committed layout (crash-resume
-    # checkpoints end at it, kgbench's among them), and its row count
-    # is the broadcast guard for the canonical rewrites below
-    out["cmap_full"] = ledger.run_stage(
-        spark, "cmap_full",
-        lambda: canonical_labels(entities, P.same_links(triples)),
-        after=("triples", "entities"),
-    )
-    cmap_rows = ledger.records()["cmap_full"]["rows_out"]
-    out["cmap"] = ledger.run_stage(
-        spark, "cmap",
-        lambda: entities.join(out["cmap_full"], "entity_id").select(
-            "entity_id", "canonical_id"
+        ("edges", ("linked",), lambda g: edges_from_resolved(g["linked"]), None),
+        ("quarantine", ("linked",), lambda g: quarantine_from_resolved(g["linked"]), None),
+        # full labeling (declared entities AND undeclared alias
+        # endpoints); public cmap = its restriction to declared
+        # entities. No stage below reads the undeclared rows; it stays
+        # committed because its ledger record is part of the committed
+        # layout (crash-resume checkpoints end at it, kgbench's among
+        # them), and its row count is the broadcast guard for the
+        # canonical rewrites below
+        (
+            "cmap_full", ("triples", "entities"),
+            lambda g: canonical_labels(g["entities"], P.same_links(g["triples"])),
+            None,
         ),
-        after=("entities", "cmap_full"),
-    )
-    cmap = out["cmap"]
-
-    out["canon_edges"] = ledger.run_stage(
-        spark, "canon_edges",
-        lambda: canonical_edges(out["edges"], cmap, cmap_rows),
-        after=("edges", "cmap"),
-        partition_by=["pred"],
-    )
-    out["nodes"] = ledger.run_stage(
-        spark, "nodes",
-        lambda: canonical_nodes(triples, cmap, cmap_rows),
-        after=("triples", "cmap"),
-        # provenance partition first (rdf:about routing analog), then
-        # attribute family for consumer partition pruning
-        partition_by=["profile", "attr"],
-    )
-    return out
+        (
+            "cmap", ("entities", "cmap_full"),
+            lambda g: g["entities"].join(g["cmap_full"], "entity_id").select(
+                "entity_id", "canonical_id"
+            ),
+            None,
+        ),
+        (
+            "canon_edges", ("edges", "cmap"),
+            lambda g: canonical_edges(g["edges"], g["cmap"], rows("cmap_full")),
+            ["pred"],
+        ),
+        (
+            "nodes", ("triples", "cmap"),
+            lambda g: canonical_nodes(g["triples"], g["cmap"], rows("cmap_full")),
+            # provenance partition first (rdf:about routing analog),
+            # then attribute family for consumer partition pruning
+            ["profile", "attr"],
+        ),
+    ]
+    return ledger.run_stages(spark, graph, {"triples": triples})
 
 
 def ingest_increment(
@@ -197,7 +200,7 @@ def ingest_increment(
     # snapshot this reads)
     old_hdr = None
     if ledger.is_committed("meta", after=("triples",)):
-        _om = spark.read.parquet(ledger.stage_dir("meta"))
+        _om = ledger.read_stage(spark, "meta")
         if "author" in _om.columns:
             old_hdr = (
                 _om.select(

@@ -5,13 +5,22 @@ snapshot).
 The reference's analog is its grouped error/info accounting printed at
 the end of an import (cimpy/cimimport.py:41-66,71-74). Here each
 pipeline stage commits (a) its output as a parquet snapshot directory
-and (b) a lineage record `(stage, rows_out, partitions, committed)`.
+and (b) a lineage record `(stage, rows_out, partitions, committed,
+schema)`.
 A stage is *committed* iff its `_SUCCESS` marker and its ledger row
 both exist. `run_stage` reuses a committed snapshot only when its
 commit is later than the last commit of every stage its build reads;
 otherwise it recomputes — re-running a finished pipeline is a no-op,
 and a resume after a crash between two commits rebuilds exactly the
 stages whose inputs changed.
+
+`run_stages` runs a batch of such stages as a DAG: each build starts
+in its own thread once the stages in its `after` are written, so
+builds overlap, while records retire in batch order. A record waits
+until every record before it is appended; a failed stage retires
+nothing after it, so a crash leaves the ledger a sequential run would.
+Each record holds its snapshot's schema, so a reused stage is read
+without a schema-inference job; a record without one is stale.
 
 On a real cluster the snapshot store is Iceberg (atomic snapshot
 commit replaces the `_SUCCESS` convention and gives time travel);
@@ -23,8 +32,13 @@ from __future__ import annotations
 
 import json
 import os
+import threading
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
+from functools import partial
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class LineageLedger:
@@ -32,16 +46,29 @@ class LineageLedger:
         self.out_dir = out_dir
         self.path = os.path.join(out_dir, "_lineage.jsonl")
         os.makedirs(out_dir, exist_ok=True)
+        self._lock = threading.Lock()  # guards the ledger file and _held
+        # while `run_stages` runs: records of written stages that wait
+        # for the records before them (stage -> record)
+        self._held: dict[str, dict] | None = None
 
     def records(self) -> dict[str, dict]:
+        """Last record per stage, with its commit order as `seq`. A
+        record held back by a running batch counts as committed after
+        every appended one, so a stage's dependents see its commit as
+        soon as its data is written."""
         recs: dict[str, dict] = {}
-        if os.path.exists(self.path):
-            with open(self.path) as f:
-                for seq, line in enumerate(f):
-                    if line.strip():
-                        r = json.loads(line)
-                        r["seq"] = seq  # commit order; last record wins
-                        recs[r["stage"]] = r
+        seq = -1
+        with self._lock:
+            if os.path.exists(self.path):
+                with open(self.path) as f:
+                    for seq, line in enumerate(f):
+                        if line.strip():
+                            r = json.loads(line)
+                            r["seq"] = seq  # commit order; last record wins
+                            recs[r["stage"]] = r
+            held = list((self._held or {}).values())
+        for seq, r in enumerate(held, start=seq + 1):
+            recs[r["stage"]] = {**r, "seq": seq}
         return recs
 
     def stage_dir(self, stage: str) -> str:
@@ -58,8 +85,17 @@ class LineageLedger:
         if "increments" in rec:  # append-only stage
             ok = self.is_append_committed(stage)
         else:
-            ok = os.path.exists(os.path.join(self.stage_dir(stage), "_SUCCESS"))
+            # a record without a schema predates schema recording: stale
+            ok = "schema" in rec and os.path.exists(
+                os.path.join(self.stage_dir(stage), "_SUCCESS")
+            )
         return ok and all(rec["seq"] > recs[s]["seq"] for s in after if s in recs)
+
+    def read_stage(self, spark: SparkSession, stage: str) -> DataFrame:
+        """Reader over a committed stage, with the schema its record
+        holds (no schema-inference job)."""
+        schema = StructType.fromJson(json.loads(self.records()[stage]["schema"]))
+        return spark.read.schema(schema).parquet(self.stage_dir(stage))
 
     def commit(
         self,
@@ -68,6 +104,7 @@ class LineageLedger:
         parts: int,
         partition_rows: dict[str, int] | None = None,
         increments: list[str] | None = None,
+        schema: str | None = None,
     ) -> None:
         rec = {
             "stage": stage,
@@ -78,6 +115,15 @@ class LineageLedger:
         }
         if increments is not None:
             rec["increments"] = increments
+        if schema is not None:
+            rec["schema"] = schema
+        with self._lock:
+            if self._held is not None:  # a batch appends it in its turn
+                self._held[stage] = rec
+                return
+            self._append(rec)
+
+    def _append(self, rec: dict) -> None:
         # append-only ledger; last record per stage wins on read
         with open(self.path, "a") as f:
             f.write(json.dumps(rec) + "\n")
@@ -98,7 +144,7 @@ class LineageLedger:
         per_file = self._per_file_rows(path, self.stage_dir(stage))
         rows = sum(per_file.values()) + (prev["rows_out"] if prev else 0)
         parts = len(per_file) + (prev["partitions"] if prev else 0)
-        self.commit(stage, rows, parts, per_file, increments)
+        self.commit(stage, rows, parts, per_file, increments, df.schema.json())
 
     def _per_file_rows(self, scan_dir: str, rel_base: str) -> dict[str, int]:
         """Per-file row counts for a just-written parquet dir, read
@@ -232,9 +278,72 @@ class LineageLedger:
         """
         d = self.stage_dir(stage)
         if self.is_committed(stage, after):
-            return spark.read.parquet(d)
+            return self.read_stage(spark, stage)
         df = build()
         self._write_and_commit(stage, df, d, partition_by)
         # explicit schema: an empty stage writes no data files and
         # schema inference would fail on read-back
         return spark.read.schema(df.schema).parquet(d)
+
+    def run_stages(
+        self,
+        spark: SparkSession,
+        stages: list[tuple],
+        inputs: dict[str, DataFrame],
+    ) -> dict[str, DataFrame]:
+        """Run a batch of `(stage, after, build, partition_by)` through
+        `run_stage`, as a DAG over `after`, and return every stage's
+        reader along with `inputs` (committed stages the batch reads).
+
+        `build` takes `{s: reader of s for s in after}`. A stage starts
+        in its own thread once every stage in its `after` is written,
+        with the caller's Spark local properties (job group, streaming
+        batch). Records are appended in list order: a written stage's
+        record waits for the records before it. If a stage fails, the
+        stages before it still run and commit, none after it appends a
+        record, and the call raises the failure of the first failed
+        stage in list order once no stage thread is running.
+        """
+        order = [stage for stage, *_ in stages]
+        for i, (stage, after, *_) in enumerate(stages):
+            if not set(after) <= set(inputs) | set(order[:i]):
+                raise ValueError(f"{stage} reads a stage that is neither an input nor before it")
+        out = dict(inputs)
+        started: set[int] = set()
+        failed: dict[int, Exception] = {}
+        retired = 0  # records appended, in list order
+        running = {}
+        with self._lock:
+            self._held = {}
+        try:
+            with ThreadPoolExecutor(max_workers=len(stages)) as pool:
+                while True:
+                    # nothing after the first failure starts
+                    for i in range(min(failed, default=len(stages))):
+                        stage, after, build, partition_by = stages[i]
+                        if i not in started and all(s in out for s in after):
+                            started.add(i)
+                            run = inheritable_thread_target(spark)(self.run_stage)
+                            built = partial(build, {s: out[s] for s in after})
+                            running[pool.submit(run, spark, stage, built, after, partition_by)] = i
+                    if not running:
+                        break
+                    done, _ = wait(running, return_when=FIRST_COMPLETED)
+                    for fut in done:
+                        i = running.pop(fut)
+                        try:
+                            out[order[i]] = fut.result()
+                        except Exception as exc:  # raised once no stage runs
+                            failed[i] = exc
+                    while retired < len(order) and order[retired] in out:
+                        with self._lock:
+                            rec = self._held.pop(order[retired], None)
+                            if rec is not None:
+                                self._append(rec)
+                        retired += 1
+        finally:
+            with self._lock:
+                self._held = None
+        if failed:
+            raise failed[min(failed)]
+        return out

@@ -4,11 +4,14 @@ be re-extracted."""
 
 from __future__ import annotations
 
+import json
+import threading
+
 import pytest
 from pyspark.sql import functions as F
 
 from cimpy_spark.fixtures.events_transcripts import transcripts_from_events
-from cimpy_spark.operators.materialize import ingest_increment, run_pipeline
+from cimpy_spark.operators.materialize import STAGES, ingest_increment, run_pipeline
 from tests.conftest import SF_TINY
 
 
@@ -27,6 +30,12 @@ def test_incremental_equals_full(spark, tmp_path):
     res_inc = ingest_increment(spark, t, inc_dir)
 
     res_full = run_pipeline(spark, t, full_dir)
+
+    # bootstrap and increment each commit every stage, in STAGES order
+    from cimpy_spark.plans.lineage import LineageLedger
+
+    with open(LineageLedger(inc_dir).path) as f:
+        assert [json.loads(line)["stage"] for line in f] == STAGES + STAGES
 
     for stage in ["triples", "entities", "edges", "cmap", "canon_edges", "nodes"]:
         a, b = res_inc[stage], res_full[stage]
@@ -83,7 +92,7 @@ def test_crash_between_triples_and_cmap_commits(spark, tmp_path):
         assert full[stage].exceptAll(res[stage]).count() == 0, stage
 
 
-@pytest.mark.parametrize("lost", ["meta", "entities"])
+@pytest.mark.parametrize("lost", ["meta", "entities", "edges", "cmap_full"])
 def test_resume_after_interrupted_ingest_equals_full_build(
     spark, tmp_path, monkeypatch, lost
 ):
@@ -91,7 +100,11 @@ def test_resume_after_interrupted_ingest_equals_full_build(
     `lost` commit, leaves derived stages built from the smaller
     snapshot. The documented resume, `run_pipeline` over the same
     input, must rebuild every stage that predates the append, not
-    reuse it because its `_SUCCESS` marker is still there."""
+    reuse it because its `_SUCCESS` marker is still there.
+
+    `edges` and `cmap_full` fail while siblings build: the stages
+    before the failed one still commit, none after it does, and the
+    failure itself surfaces once no stage is running."""
     from cimpy_spark.plans.lineage import LineageLedger
 
     t = transcripts_from_events(spark, SF_TINY).cache()
@@ -100,17 +113,32 @@ def test_resume_after_interrupted_ingest_equals_full_build(
     d = str(tmp_path / "kg")
     run_pipeline(spark, t.filter(F.col("conv_id").isin(list(half))), d)
 
+    with open(LineageLedger(d).path) as f:
+        kept = len(f.readlines())
     real = LineageLedger.run_stage
+    running = []  # stages inside run_stage
+    lock = threading.Lock()
 
     def crash(ledger, spark_, stage, *args, **kwargs):
         if stage == lost:
             raise RuntimeError(f"injected crash before {stage} commit")
-        return real(ledger, spark_, stage, *args, **kwargs)
+        with lock:
+            running.append(stage)
+        try:
+            return real(ledger, spark_, stage, *args, **kwargs)
+        finally:
+            with lock:
+                running.remove(stage)
 
     monkeypatch.setattr(LineageLedger, "run_stage", crash)
-    with pytest.raises(RuntimeError, match="injected crash"):
+    with pytest.raises(RuntimeError, match=f"injected crash before {lost} commit"):
         ingest_increment(spark, t, d)
+    assert running == []
     monkeypatch.setattr(LineageLedger, "run_stage", real)
+    with open(LineageLedger(d).path) as f:
+        recommitted = [json.loads(line)["stage"] for line in f.readlines()[kept:]]
+    # the triples append, then every stage before the lost one
+    assert recommitted == STAGES[: STAGES.index(lost)]
 
     res = run_pipeline(spark, t, d)
     full = run_pipeline(spark, t, str(tmp_path / "full"))

@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 
 from cimpy_spark.fixtures.events_transcripts import transcripts_from_events
 from cimpy_spark.operators.canonicalize import canonical_edges
@@ -25,6 +26,42 @@ def test_pipeline_commits_all_stages(spark, tmp_path):
     # partitioned layout: edges by pred, nodes by attr (profile-routing analog)
     assert any(p.startswith("pred=") for p in os.listdir(ledger.stage_dir("canon_edges")))
     assert any(p.startswith("profile=") for p in os.listdir(ledger.stage_dir("nodes")))
+    # builds overlap, but the records land in STAGES order
+    with open(ledger.path) as f:
+        assert [json.loads(line)["stage"] for line in f] == STAGES
+
+
+def test_independent_stages_build_concurrently(spark, tmp_path, monkeypatch):
+    """`edges` (reads `linked`) and `cmap_full` (reads `triples` and
+    `entities`) are independent: their builds must be able to meet.
+    Run one after the other, the first build breaks the barrier. The
+    builds run in stage threads that carry the caller's job group."""
+    from cimpy_spark.operators import materialize
+
+    sc = spark.sparkContext
+    barrier = threading.Barrier(2, timeout=120)
+    groups = []
+
+    def meeting(fn):
+        def build(*args):
+            groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            barrier.wait()
+            return fn(*args)
+
+        return build
+
+    monkeypatch.setattr(materialize, "edges_from_resolved", meeting(materialize.edges_from_resolved))
+    monkeypatch.setattr(materialize, "canonical_labels", meeting(materialize.canonical_labels))
+    t = transcripts_from_events(spark, SF_TINY)
+    sc.setJobGroup("dag", "concurrent stage builds")
+    try:
+        res = run_pipeline(spark, t, str(tmp_path / "kg"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not barrier.broken
+    assert groups == ["dag", "dag"]
+    assert res["nodes"].count() > 0
 
 
 def test_resume_skips_committed_stages(spark, tmp_path):
@@ -59,7 +96,17 @@ def test_rerun_is_noop_and_lineage_counts(spark, tmp_path):
     run_pipeline(spark, t, out_dir)
     ledger = LineageLedger(out_dir)
     n_lines_before = sum(1 for _ in open(ledger.path))
-    run_pipeline(spark, t, out_dir)  # full re-run: everything committed
+    # full re-run: everything committed, so every stage is read with
+    # the schema its record holds and no Spark job runs (the stage
+    # threads inherit the job group)
+    sc = spark.sparkContext
+    sc.setJobGroup("rerun", "re-run of a complete out_dir")
+    try:
+        run_pipeline(spark, t, out_dir)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("rerun") == []
     n_lines_after = sum(1 for _ in open(ledger.path))
     assert n_lines_before == n_lines_after  # no stage recomputed
     recs = ledger.records()
